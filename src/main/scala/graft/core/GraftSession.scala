@@ -13,6 +13,8 @@ import org.apache.spark.sql.SparkSession
   *  - `nanosAsLong` parquet compatibility (the corpus's TIMESTAMP(NANOS)
   *    columns; `Tables.table` rebuilds µs timestamps on top).
   *  - graft's native expressions registered for SQL via GraftExtensions.
+  *  - a generated-class cache sized to the engine's working set
+  *    ([[CodegenCacheEntries]]), so repeated plans reuse compiled code.
   *
   * `shufflePartitions` = 0 (the default) derives the setting where it
   * can be known at build time: a `local[N]` master gets N, `local[*]`
@@ -25,6 +27,17 @@ import org.apache.spark.sql.SparkSession
   * posture.
   */
 object GraftSession {
+
+  /** `spark.sql.codegen.cache.maxEntries` for every session seam
+    * (`GraftSession.builder`, `core.Measure.session`, the test session).
+    * Spark's default of 100 is below the working set of repeated runs:
+    * all 240 `SparkEntry.queries` need about 2,059 generated classes and
+    * every 48th of them 154, so at 100 entries each repeated pass
+    * recompiles everything (docs/BENCH.md, "Codegen cache — measured").
+    * 4096 is about twice the 240-query working set. The conf is static,
+    * and Spark reads it once, when the JVM first generates code, from
+    * the active session: only the builder of the first session sets it. */
+  val CodegenCacheEntries = 4096L
 
   def builder(master: String = "", shufflePartitions: Int = 0)
       : SparkSession.Builder = {
@@ -46,6 +59,7 @@ object GraftSession {
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.sql.extensions", "graft.GraftExtensions")
+      .config("spark.sql.codegen.cache.maxEntries", CodegenCacheEntries)
     val withMaster = if (master.nonEmpty) b.master(master) else b
     val derived = derivePartitions(master, shufflePartitions)
     if (derived > 0)

@@ -11,7 +11,8 @@ object Measure {
 
   /** The measurement SparkSession every timed main uses: local[cpus],
     * cpus shuffle partitions, 8 MB splits (single-file test tables
-    * stay parallel), UTC, graft extensions, no UI. */
+    * stay parallel), UTC, graft extensions, no UI, and the engine's
+    * generated-class cache size. */
   def session(cpus: String): SparkSession = {
     val s = SparkSession.builder()
       .master(s"local[$cpus]")
@@ -20,6 +21,8 @@ object Measure {
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.extensions", "graft.GraftExtensions")
       .config("spark.ui.enabled", "false")
+      .config("spark.sql.codegen.cache.maxEntries",
+        GraftSession.CodegenCacheEntries)
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     s

@@ -692,14 +692,18 @@ case class Topology(topics: Seq[TopicSpec], operators: Seq[OperatorSpec],
 
   /** Read a file-backed sink topic back in its own format (the
     * durable-handoff relay of [[runBatch]]). The read-back carries the
-    * frame's own schema, so a JSONL hop never re-infers. */
+    * frame's own schema, so no hop re-infers: inference would re-type
+    * `partition_by` columns from their directory names (a string "01"
+    * reads as int 1) and cost one schema job per parquet sink. */
   private def readFileSink(spark: SparkSession, t: TopicSpec,
                            schema: org.apache.spark.sql.types.StructType,
-                           path: String): DataFrame =
+                           path: String): DataFrame = {
+    val r = spark.read.schema(schema)
     t.kind match {
-      case "json" => spark.read.schema(schema).json(path)
-      case _ => spark.read.parquet(path)
+      case "json" => r.json(path)
+      case _ => r.parquet(path)
     }
+  }
 
   /** Batch run: every file-kind sink topic is written under `outDir`
     * in its own format (parquet or JSONL) — the unified batch path;
@@ -781,7 +785,10 @@ case class Topology(topics: Seq[TopicSpec], operators: Seq[OperatorSpec],
           val path = s"$outDir/${sinkTopic.name}"
           writeFileSink(df, sinkTopic, "overwrite", path)
           names += sinkTopic.name
-          readFileSink(spark, sinkTopic, df.schema, path)
+          // a terminal sink relays nothing: skip the read-back
+          if (consumerCount.contains(sinkTopic.name))
+            readFileSink(spark, sinkTopic, df.schema, path)
+          else df
         })
     names.toSeq
   }

@@ -15,6 +15,8 @@ object TestSpark {
       .config("spark.sql.warehouse.dir", // static conf — set before create
         java.nio.file.Files.createTempDirectory("graft-wh").toString)
       .config("spark.ui.enabled", "false")
+      .config("spark.sql.codegen.cache.maxEntries", // static, as above
+        graft.core.GraftSession.CodegenCacheEntries)
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     s

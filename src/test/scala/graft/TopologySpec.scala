@@ -328,6 +328,125 @@ class TopologySpec extends SparkSpec {
     assert(back.filter(col("lang") === "en").count() == 2)
   }
 
+  test("parquet relay keeps the written schema: a partition_by string " +
+    "column is not re-typed from its directory names") {
+    val tmp = Files.createTempDirectory("topo_parttype").toString
+    Seq(("01", 1L), ("02", 2L), ("010", 3L)).toDF("code", "v")
+      .write.mode("overwrite").parquet(s"$tmp/in")
+    val yaml =
+      s"""topics:
+         |  - name: codes
+         |    kind: parquet
+         |    path: $tmp/in
+         |  - name: by_code
+         |    kind: parquet
+         |    partition_by: [code]
+         |  - name: code_view
+         |    kind: memory
+         |operators:
+         |  gate:
+         |    factory: graft.streaming.ops.FilterOp
+         |    sources: [codes]
+         |    sinks: [by_code]
+         |    config:
+         |      filter_expr: v >= 0
+         |  pass:
+         |    factory: graft.streaming.ops.SqlOp
+         |    sources: [by_code]
+         |    sinks: [code_view]
+         |    config:
+         |      sql: SELECT code, v FROM by_code
+         |      views: [by_code]
+         |""".stripMargin
+    Topology.parse(yaml).runBatch(spark, s"$tmp/sinks")
+    val got = spark.table("code_view")
+    assert(got.schema("code").dataType ==
+      org.apache.spark.sql.types.StringType, got.schema)
+    assert(got.as[(String, Long)].collect().toSet ==
+      Set(("01", 1L), ("02", 2L), ("010", 3L)))
+  }
+
+  test("unpartitioned parquet relay: the downstream operator sees the " +
+    "schema a plain read of the sink gives (names, types, nullability, " +
+    "order)") {
+    val tmp = Files.createTempDirectory("topo_relayschema").toString
+    spark.sql(
+      """SELECT id AS n, CAST(id AS INT) AS i, CAST(id AS DOUBLE) AS x,
+        |  CAST(id AS DECIMAL(10, 2)) AS d, CAST(id AS STRING) AS str,
+        |  named_struct('a', id, 'b', 'x') AS st, array(id, id) AS arr,
+        |  map('k', id) AS m, TIMESTAMP'2024-01-01 00:00:00' AS ts,
+        |  CAST(NULL AS STRING) AS nul
+        |FROM range(3)""".stripMargin)
+      .write.mode("overwrite").parquet(s"$tmp/in")
+    val yaml =
+      s"""topics:
+         |  - name: wide
+         |    kind: parquet
+         |    path: $tmp/in
+         |  - name: wide_mid
+         |    kind: parquet
+         |  - name: wide_view
+         |    kind: memory
+         |operators:
+         |  gate:
+         |    factory: graft.streaming.ops.FilterOp
+         |    sources: [wide]
+         |    sinks: [wide_mid]
+         |    config:
+         |      filter_expr: n >= 0
+         |  pass:
+         |    factory: graft.streaming.ops.SqlOp
+         |    sources: [wide_mid]
+         |    sinks: [wide_view]
+         |    config:
+         |      sql: SELECT * FROM wide_mid
+         |      views: [wide_mid]
+         |""".stripMargin
+    Topology.parse(yaml).runBatch(spark, s"$tmp/sinks")
+    val seen = spark.table("wide_view").schema
+    val plain = spark.read.parquet(s"$tmp/sinks/wide_mid").schema
+    assert(seen == plain, s"\n$seen\n$plain")
+    assert(spark.table("wide_view").count() == 3)
+  }
+
+  test("runBatch reads no terminal sink back: a one-source/one-sink " +
+    "chain with no shuffle runs 2 jobs (source schema, write)") {
+    val tmp = Files.createTempDirectory("topo_jobs").toString
+    Seq(1L, 2L, 3L).toDF("v").write.mode("overwrite").parquet(s"$tmp/in")
+    val yaml =
+      s"""topics:
+         |  - name: nums
+         |    kind: parquet
+         |    path: $tmp/in
+         |  - name: kept
+         |    kind: parquet
+         |operators:
+         |  gate:
+         |    factory: graft.streaming.ops.FilterOp
+         |    sources: [nums]
+         |    sinks: [kept]
+         |    config:
+         |      filter_expr: v > 1
+         |""".stripMargin
+    val topo = Topology.parse(yaml)
+    val sc = spark.sparkContext
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs.incrementAndGet()
+    }
+    org.apache.spark.graftbridge.ListenerDrain(sc)
+    sc.addSparkListener(listener)
+    try {
+      topo.runBatch(spark, s"$tmp/sinks")
+      org.apache.spark.graftbridge.ListenerDrain(sc)
+    } finally sc.removeSparkListener(listener)
+    assert(jobs.get == 2, s"${jobs.get} jobs")
+    assert(spark.read.parquet(s"$tmp/sinks/kept").as[Long].collect()
+      .sorted.toSeq == Seq(2L, 3L))
+  }
+
   test("ingest-gate chain wired from YAML: decontamination gate then " +
     "NB quality gate, each a topology operator (frozen-model configs " +
     "ride the config block)") {
