@@ -2,7 +2,7 @@ package graft
 import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
-    // optional args (dev / graft.Report): args(0)=sfDir, args(1)=output
+    // optional dev args: args(0)=sfDir, args(1)=output
     // path — each overrides its env var; the driver passes neither
     val sfDir = args.headOption.getOrElse(
       sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1"))

@@ -594,8 +594,10 @@ object SparkEntry {
        |$finalSelect""".stripMargin
   }
 
-  /** One entry per implemented operator from SURVEY.md §2. */
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
+  /** One entry per implemented operator from SURVEY.md §2. Built once:
+    * every entry is a `(s, dir) => …` lambda, so building the map runs
+    * no query code. */
+  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
 
     // ===== reference core: rx/rxsci operator surface =====================
 

@@ -3,18 +3,20 @@ package graft.core
 import org.apache.spark.sql.SparkSession
 
 /** Shared measurement-protocol pieces for the bench/sweep mains
-  * (graft.Bench, ScaleSweep, SkewSweep, StreamSweep). One definition
+  * (graft.Bench, Verify, ScaleSweep, SkewSweep, StreamSweep) and the dev
+  * CLI (graft.Dev). One definition
   * so a protocol change (gate threshold, session config) cannot
   * silently leave the tiers running under different rules — the
   * round-13 review found three verbatim copies drifting apart. */
 object Measure {
 
-  /** The measurement SparkSession every timed main uses: local[cpus],
-    * cpus shuffle partitions, 8 MB splits (single-file test tables
-    * stay parallel), UTC, graft extensions, no UI, and the engine's
-    * generated-class cache size. */
-  def session(cpus: String): SparkSession = {
-    val s = SparkSession.builder()
+  /** The measurement session's builder: local[cpus], cpus shuffle
+    * partitions, 8 MB splits (single-file test tables stay parallel),
+    * UTC, graft extensions, no UI, and the engine's generated-class
+    * cache size. Callers that add confs (`graft.Dev`) add them to this
+    * builder, before the session exists, so static confs apply too. */
+  def builder(cpus: String): SparkSession.Builder =
+    SparkSession.builder()
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus)
       .config("spark.sql.files.maxPartitionBytes", "8m")
@@ -23,7 +25,10 @@ object Measure {
       .config("spark.ui.enabled", "false")
       .config("spark.sql.codegen.cache.maxEntries",
         GraftSession.CodegenCacheEntries)
-      .getOrCreate()
+
+  /** The measurement SparkSession every timed main uses ([[builder]]). */
+  def session(cpus: String): SparkSession = {
+    val s = builder(cpus).getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     s
   }

@@ -1,7 +1,7 @@
 package graft
 
-import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.execution.SparkPlan
+import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
+import scala.util.Try
 
 /** Plan-shape audits: the properties that decide whether a query survives
   * a 100 TB scale-up, pinned as tests so a refactor that silently
@@ -18,6 +18,15 @@ class PlanAuditSpec extends SparkSpec {
   }
 
   private def planStr(q: String): String = plan(q).toString
+
+  /** Every battery query built once, shared by the two battery-wide
+    * audits (the first takes its executedPlan, the second its
+    * optimizedPlan, which the first already computed). A query that
+    * fails to build holds its failure here and fails both audits. */
+  private lazy val battery: Map[String, Try[QueryExecution]] =
+    SparkEntry.queries.map { case (q, fn) =>
+      q -> Try(fn(spark, sfDir).queryExecution)
+    }
 
   test("q_filter pushes its predicate into the parquet scan") {
     val p = planStr("q_filter")
@@ -58,7 +67,7 @@ class PlanAuditSpec extends SparkSpec {
     SparkEntry.queries.keys.filterNot(allowed).foreach { q =>
       // a query that fails to PLAN is an audit failure, not a skip —
       // swallowing it here would green-light a broken query
-      val p = try planStr(q) catch {
+      val p = try battery(q).get.executedPlan.toString catch {
         case e: Throwable => fail(s"$q failed to plan: ${e.getMessage}")
       }
       assert(!p.contains("CartesianProduct"),
@@ -595,8 +604,7 @@ class PlanAuditSpec extends SparkSpec {
     val offenders = scala.collection.mutable.ArrayBuffer.empty[String]
     val usedAllowlist = scala.collection.mutable.Set.empty[String]
     SparkEntry.queries.keys.toSeq.sorted.foreach { q =>
-      val p = try SparkEntry.queries(q)(spark, sfDir)
-        .queryExecution.optimizedPlan
+      val p = try battery(q).get.optimizedPlan
       catch {
         case e: Throwable => fail(s"$q failed to plan: ${e.getMessage}")
       }
