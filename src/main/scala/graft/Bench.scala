@@ -6,11 +6,10 @@ object Bench {
     // path — each overrides its env var; the driver passes neither
     val sfDir = args.headOption.getOrElse(
       sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1"))
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     // shared measurement session (8 MB splits keep single-file test
     // tables parallel) — graft.core.Measure, one definition for every
     // timed main
-    val spark = core.Measure.session(cpus)
+    val spark = core.Measure.session(core.Measure.cpus)
     // Untimed warmup: one representative per codegen family, so the
     // first timed query of each family does not pay the JVM's one-time
     // JIT and class-loading cost (measured round 1: ~50s of the 104s

@@ -32,7 +32,7 @@ object Dev {
         s"usage: graft.Dev <${commands.mkString("|")}> <sfDir> <qs> [...]")
       sys.exit(2)
     }
-    val b = core.Measure.builder(sys.env.getOrElse("SPARK_GRAFT_CPUS", "4"))
+    val b = core.Measure.builder(core.Measure.cpus)
     sys.env.get("SPARK_GRAFT_CONF").foreach(confPairs(_).foreach {
       case (k, v) => b.config(k, v)
     })

@@ -43,8 +43,7 @@ object NearDupProfile {
     val outJson = args.lift(1).getOrElse("neardup_profile.json")
     require(new java.io.File(s"$scaledDir/documents.parquet").exists,
       s"no scaled corpus at $scaledDir — run graft.ScaleSweep first")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = graft.core.Measure.session(cpus)
+    val spark = graft.core.Measure.session(graft.core.Measure.cpus)
     val hdfsProvider = spark.conf.get(Provider) // the build default
 
     val work = java.nio.file.Files

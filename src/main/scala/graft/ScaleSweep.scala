@@ -218,8 +218,7 @@ object ScaleSweep {
     val factor = args.lift(2).map(_.toInt).getOrElse(10)
     require(factor >= 2 && factor <= 125,
       s"replication factor 2..125 (permFor distinctness), got $factor")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = core.Measure.session(cpus)
+    val spark = core.Measure.session(core.Measure.cpus)
 
     val scaleDir = scaledDirFor(baseDir, factor)
     generate(spark, baseDir, scaleDir, factor)

@@ -46,8 +46,7 @@ object SkewSweep {
     require(new java.io.File(s"$scaledDir/lineitem.parquet").exists,
       s"no scaled corpus at $scaledDir — run graft.ScaleSweep first " +
         "(factor 100)")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = graft.core.Measure.session(cpus)
+    val spark = graft.core.Measure.session(graft.core.Measure.cpus)
 
     val orders = spark.read.parquet(s"$scaledDir/orders.parquet")
     val hotKey = 1L

@@ -3487,11 +3487,7 @@ object SparkEntry {
       val ev = t(s, dir, "events")
       val edges = graft.llm.Graph.transitionEdges(ev, "user_id",
         "event_type", Seq(col("ts"), col("event_id")))
-      // checkpointEvery=1: hits' plan multiplies ~4x per iteration
-      // (each rescale references its input twice) — measured 3.15s ->
-      // 1.90s at sf0.1 from truncating that lineage per level
-      graft.llm.Graph.hits(edges, "src", "dst", iters = 2,
-        checkpointEvery = 1)
+      graft.llm.Graph.hits(edges, "src", "dst", iters = 2)
         .orderBy("node")
     }),
 
@@ -3515,9 +3511,6 @@ object SparkEntry {
           struct(col("id_b").as("src"), col("id_a").as("dst"))))
           .as("e"))
         .select(col("e.src").as("src"), col("e.dst").as("dst"))
-      // NO checkpointEvery here: pageRank lineage is linear, and the
-      // eager per-level materialization cost the query 2.4s -> 3.2s at
-      // sf0.1 (hits, whose lineage multiplies ~4x/level, wins instead)
       graft.llm.Graph.pageRank(edges, "src", "dst", iters = 2)
         .orderBy("node")
     }),

@@ -36,7 +36,7 @@ object StreamSweep {
     val outJson = args.lift(1).getOrElse("stream_out.json")
     require(new java.io.File(s"$scaledDir/events.parquet").exists,
       s"no scaled corpus at $scaledDir — run graft.ScaleSweep first")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus = core.Measure.cpus
     val spark = graft.core.Measure.session(cpus)
 
     val work = java.nio.file.Files

@@ -14,7 +14,10 @@ import org.apache.spark.sql.SparkSession
   *    columns; `Tables.table` rebuilds µs timestamps on top).
   *  - graft's native expressions registered for SQL via GraftExtensions.
   *  - a generated-class cache sized to the engine's working set
-  *    ([[CodegenCacheEntries]]), so repeated plans reuse compiled code.
+  *    ([[CodegenCacheEntries]]), so repeated plans reuse compiled code,
+  *    and whole-stage class names without the stage id: AQE numbers
+  *    stages in the order they complete, so with the id in the name a
+  *    rerun of the same plan could miss the cache.
   *
   * `shufflePartitions` = 0 (the default) derives the setting where it
   * can be known at build time: a `local[N]` master gets N, `local[*]`
@@ -60,6 +63,7 @@ object GraftSession {
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.sql.extensions", "graft.GraftExtensions")
       .config("spark.sql.codegen.cache.maxEntries", CodegenCacheEntries)
+      .config("spark.sql.codegen.useIdInClassName", "false")
     val withMaster = if (master.nonEmpty) b.master(master) else b
     val derived = derivePartitions(master, shufflePartitions)
     if (derived > 0)

@@ -10,11 +10,17 @@ import org.apache.spark.sql.SparkSession
   * round-13 review found three verbatim copies drifting apart. */
 object Measure {
 
+  /** local[N] and shuffle partitions for every measured main:
+    * `SPARK_GRAFT_CPUS`, default 4 (one value, so no tier silently
+    * oversubscribes a small box). */
+  def cpus: String = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+
   /** The measurement session's builder: local[cpus], cpus shuffle
     * partitions, 8 MB splits (single-file test tables stay parallel),
     * UTC, graft extensions, no UI, and the engine's generated-class
-    * cache size. Callers that add confs (`graft.Dev`) add them to this
-    * builder, before the session exists, so static confs apply too. */
+    * cache settings (`GraftSession`). Callers that add confs
+    * (`graft.Dev`) add them to this builder, before the session exists,
+    * so static confs apply too. */
   def builder(cpus: String): SparkSession.Builder =
     SparkSession.builder()
       .master(s"local[$cpus]")
@@ -25,6 +31,7 @@ object Measure {
       .config("spark.ui.enabled", "false")
       .config("spark.sql.codegen.cache.maxEntries",
         GraftSession.CodegenCacheEntries)
+      .config("spark.sql.codegen.useIdInClassName", "false")
 
   /** The measurement SparkSession every timed main uses ([[builder]]). */
   def session(cpus: String): SparkSession = {

@@ -770,12 +770,13 @@ object Dedup {
     * takes the min of its own and its neighbors' labels; converges in
     * O(graph diameter) rounds (near-dup clusters are shallow — dozens of
     * rounds covers pathological chains; `maxIters` bounds runaways).
-    * Each round is one join + one aggregate — shuffle-linear in |edges|;
-    * iterates over cached frames with the previous round unpersisted,
-    * the standard Spark iterative-graph shape (cf. the alternating
-    * star algorithms of Kiveris et al., "Connected Components in
-    * MapReduce and Beyond", SOCC'14 — label propagation is the
-    * low-diameter special case that needs no re-rooting).
+    * Each round is one join + one aggregate — shuffle-linear in |edges|
+    * — and ends in an eager `localCheckpoint`, so the next round plans
+    * from the previous round's rows and the plan stays one round deep
+    * whatever the round count (cf. the alternating star algorithms of
+    * Kiveris et al., "Connected Components in MapReduce and Beyond",
+    * SOCC'14 — label propagation is the low-diameter special case that
+    * needs no re-rooting).
     *
     * Output: (id, component) with component = min node id reachable.
     *
@@ -818,14 +819,10 @@ object Dedup {
       return spark.createDataset(unionFind(halfEdges))
         .toDF("id", "component")
     }
-    val base = sym.select(col("src").as("id")).distinct()
-      .withColumn("label", col("id")).persist()
-    var labels: DataFrame = base
-    // each round's `updated` frame stays persisted until the NEXT round
-    // has materialized on top of it (the changed-count action) — so no
-    // round ever recomputes lineage past its predecessor, and exactly
-    // one action runs per round
-    var carried: DataFrame = null
+    // each round reads `labels` twice: untruncated, the plan doubles
+    // every round (driver OOM by round 6 on a 120-node graph)
+    var labels = sym.select(col("src").as("id")).distinct()
+      .withColumn("label", col("id"))
     var changed = 1L
     var i = 0
     while (changed > 0 && i < maxIters) {
@@ -836,10 +833,8 @@ object Dedup {
         .select(col("id"), col("label"),
           least(col("label"), coalesce(col("nbr_label"), col("label")))
             .as("new_label"))
-        .persist()
+        .localCheckpoint()
       changed = updated.filter(col("new_label") =!= col("label")).count()
-      if (carried != null) carried.unpersist() else base.unpersist()
-      carried = updated
       labels = updated.select(col("id"), col("new_label").as("label"))
       i += 1
     }
@@ -849,17 +844,7 @@ object Dedup {
         s"components(): maxIters=$maxIters reached with $changed labels " +
           "still changing — labels are NOT converged (graph diameter " +
           "exceeds maxIters); raise maxIters for correct components")
-    val out = labels.select(col("id"), col("label").as("component"))
-    // the final round's frame backs `out`'s lineage: return `out`
-    // materialized in its own (small — one row per paired node) cache so
-    // every intermediate round can be released; the result cache is
-    // intentionally retained for the caller's consumption
-    if (carried != null) {
-      val result = out.persist()
-      result.count()
-      carried.unpersist()
-      result
-    } else out
+    labels.select(col("id"), col("label").as("component"))
   }
 
   /** Driver union-find (path compression + union-to-min-root): the

@@ -39,6 +39,10 @@ import org.apache.spark.storage.StorageLevel
   */
 object Graph {
 
+  /** pageRank truncates every 4th level: its plan grows only linearly,
+    * and a per-level checkpoint cost q_pagerank_docs 2.4 -> 3.2 s. */
+  private val PageRankTruncateEvery = 4
+
   /** Edge-weight ingestion shared by the three weighted walks: the
     * fixed-point integer arithmetic needs LONG weights, and a silent
     * cast("long") truncated fractional weights to 0 — a similarity-
@@ -74,22 +78,13 @@ object Graph {
     *              web-corpus curation). Non-seed nodes keep only their
     *              damped in-flow; the start vector stays uniform (any
     *              start converges, and uniform keeps iters = 0
-    *              meaningful). None = every node teleports (classic).
-    * @param checkpointEvery truncate plan lineage via localCheckpoint
-    *              every N levels (0 = off, the default). Use for deep
-    *              iteration counts (iters ≫ 10) where the per-level
-    *              analyzed plan would otherwise grow linearly; results
-    *              are bit-identical (exact integer arithmetic —
-    *              ScaleSpec pins iters = 10 equality). */
+    *              meaningful). None = every node teleports (classic). */
   def pageRank(edges: DataFrame, srcCol: String, dstCol: String,
                weightCol: Option[String] = None, iters: Int = 3,
                dampNum: Long = 85L, dampDen: Long = 100L,
                scale: Long = 1000000000L,
-               seeds: Option[DataFrame] = None,
-               checkpointEvery: Int = 0): DataFrame = {
+               seeds: Option[DataFrame] = None): DataFrame = {
     require(iters >= 0, s"iters must be >= 0: $iters")
-    require(checkpointEvery >= 0,
-      s"checkpointEvery must be >= 0: $checkpointEvery")
     require(dampDen > 0 && dampNum >= 0 && dampNum <= dampDen,
       s"damping must satisfy 0 <= dampNum <= dampDen: $dampNum/$dampDen")
     require(scale > 0, s"scale must be positive: $scale")
@@ -133,14 +128,7 @@ object Graph {
     // every level stays persisted until the returned frame is dropped
     // (ContextCleaner reclaims; memory held is iters · |V| rows) — the
     // in-loop materialize+unpersist barriers cost a full job each and
-    // bought nothing at realistic iteration counts. Lineage depth still
-    // grows linearly with iters; `checkpointEvery > 0` truncates it via
-    // localCheckpoint every that-many levels (the deep-iteration seam:
-    // iters ≫ 10 otherwise accretes a plan Catalyst re-analyzes per
-    // level). localCheckpoint is executor-local (no HDFS dir needed)
-    // and itself persists the level; the trade is losing recompute-
-    // from-lineage on executor loss — acceptable for an iterative
-    // refinement that simply reruns.
+    // bought nothing at realistic iteration counts.
     var ranks = nodes.select(col("node"), lit(scale).as("rank"))
     for (i <- 1 to iters) {
       val sums = ej.join(ranks, ej("__src") === ranks("node"))
@@ -152,8 +140,7 @@ object Graph {
           (col("__base") + coalesce(
             expr(s"(__s * $dampNum) div $dampDen"), lit(0L))).as("rank"))
       ranks =
-        if (checkpointEvery > 0 && i % checkpointEvery == 0)
-          next.localCheckpoint()
+        if (i % PageRankTruncateEvery == 0) next.localCheckpoint()
         else next.persist(StorageLevel.MEMORY_AND_DISK)
     }
     ranks
@@ -192,12 +179,9 @@ object Graph {
     * Output: (node, hub, authority) as fixed-point longs. */
   def hits(edges: DataFrame, srcCol: String, dstCol: String,
            weightCol: Option[String] = None, iters: Int = 2,
-           scale: Long = 1000000000L,
-           checkpointEvery: Int = 0): DataFrame = {
+           scale: Long = 1000000000L): DataFrame = {
     require(iters >= 1, s"iters must be >= 1: $iters")
     require(scale > 0, s"scale must be positive: $scale")
-    require(checkpointEvery >= 0,
-      s"checkpointEvery must be >= 0: $checkpointEvery")
     val w = weightCol.map(c => integralWeight(col(c), "hits"))
       .getOrElse(lit(1L))
     val e0 = edges
@@ -234,27 +218,13 @@ object Graph {
           (col("rank").cast("decimal(38,0)") * col("__w")).as("__c"))
         .groupBy("node").agg(sum("__c").as("__r"))
 
-    // every level stays persisted until the returned frame is dropped
-    // (ContextCleaner reclaims) — in-loop materialize+unpersist cost
-    // ~1.7s of barrier jobs per run at sf0.1 for frames of |V| rows;
-    // memory held is iters · 2 · |V| rows, fine at any realistic iters
-    // checkpointEvery: the pageRank lineage seam (see its scaladoc),
-    // but MORE urgent here — each rescale references its input twice,
-    // so the hits plan multiplies ~4x per iteration (measured at 60
-    // nodes: plain iters=3 17.8s, iters=4 OOMs rendering the plan
-    // string; checkpointEvery=2 1.5s at iters=3, 4.1s at iters=8).
-    // Set checkpointEvery ~2 for any iters > 3. Both per-level frames
-    // truncate together; results bit-identical (GraphSpec pin).
+    // checkpoint both frames every level: each rescale reads its input
+    // twice, so the plan would grow ~4x per iteration
     var hubs = nodes.select(col("node"), lit(scale).as("rank"))
     var auths: DataFrame = null
-    for (i <- 1 to iters) {
-      val cp = checkpointEvery > 0 && i % checkpointEvery == 0
-      val rawAuths = rescaled(massToward(hubs, "__src", "__dst"))
-      auths = if (cp) rawAuths.localCheckpoint()
-              else rawAuths.persist(StorageLevel.MEMORY_AND_DISK)
-      val rawHubs = rescaled(massToward(auths, "__dst", "__src"))
-      hubs = if (cp) rawHubs.localCheckpoint()
-             else rawHubs.persist(StorageLevel.MEMORY_AND_DISK)
+    for (_ <- 1 to iters) {
+      auths = rescaled(massToward(hubs, "__src", "__dst")).localCheckpoint()
+      hubs = rescaled(massToward(auths, "__dst", "__src")).localCheckpoint()
     }
     nodes
       .join(hubs.withColumnRenamed("rank", "hub"), "node")

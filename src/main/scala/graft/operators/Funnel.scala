@@ -188,16 +188,13 @@ object Retention {
     require(windowDays >= 1, s"windowDays must be >= 1: $windowDays")
     // regs feeds BOTH the window fan-out and the present-days probe —
     // persisted (days x 2^p rows, bounded regardless of user
-    // cardinality) so the events scan + register aggregate runs once
-    // (the multi-consumer persist rule)
-    val cells = regs
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // SCOPED persist (the withPersisted rule): the merged register
-    // table is bounded (≤ days x 2^p rows), so materialize it eagerly
-    // via localCheckpoint and release the cached input before
-    // returning — a buried never-unpersisted frame leaked one cache
-    // entry per finisher call in long-lived sessions
-    try {
+    // cardinality) so the events scan + register aggregate runs once.
+    // The merged register table is bounded too (≤ days x 2^p rows), so
+    // it is materialized eagerly via localCheckpoint and the cached
+    // input released before returning — a buried never-unpersisted
+    // frame leaked one cache entry per finisher call in long-lived
+    // sessions
+    Ops.withPersisted(regs) { cells =>
       val contrib = cells.select(
         explode(expr(s"sequence(day, date_add(day, ${windowDays - 1}))"))
           .as("day"),
@@ -208,6 +205,6 @@ object Retention {
         .localCheckpoint()
       graft.functions.Hll.estimate(merged, p, Seq(col("day")))
         .orderBy("day")
-    } finally cells.unpersist(blocking = false)
+    }
   }
 }

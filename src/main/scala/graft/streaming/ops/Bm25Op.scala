@@ -7,6 +7,7 @@ import org.apache.spark.sql.functions._
 
 import graft.functions.Text
 import graft.llm.Search
+import graft.operators.Ops
 import graft.streaming.OperatorFactory
 
 /** Streaming BM25 scoring as a topology factory — the query-time face
@@ -61,9 +62,9 @@ object Bm25Op extends OperatorFactory {
     val spark = sources.head.sparkSession
     // one read + tokenize for both bounded stats jobs (1 totals row +
     // ≤|terms| df rows collected)
-    val ref = spark.read.parquet(refPath)
-      .select(Text.tokens(col(textCol)).as("__ts")).cache()
-    val (n, c, dfMap) = try {
+    val refTokens = spark.read.parquet(refPath)
+      .select(Text.tokens(col(textCol)).as("__ts"))
+    val (n, c, dfMap) = Ops.withPersisted(refTokens) { ref =>
       val tot = ref.agg(count(lit(1)).as("n"),
         sum(size(col("__ts")).cast("long").cast("decimal(38,0)"))
           .cast("long").as("c")).head
@@ -73,7 +74,7 @@ object Bm25Op extends OperatorFactory {
         .groupBy("__t").agg(count(lit(1)).as("__df"))
         .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
       (tot.getLong(0), tot.getLong(1), m)
-    } finally ref.unpersist()
+    }
     require(n > 0, s"Bm25Op: empty reference corpus at $refPath")
 
     val src = sources.head

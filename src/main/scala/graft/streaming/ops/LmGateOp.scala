@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 import graft.functions.Text
+import graft.operators.Ops
 import graft.streaming.OperatorFactory
 
 /** Streaming bigram-LM quality gate — the ingest-time face of
@@ -53,13 +54,12 @@ object LmGateOp extends OperatorFactory {
         " AS bg))"
     // one read + bigram expansion for both bounded model collects
     // (≤ topV + topB rows total)
-    val pairs = spark.read.parquet(refPath)
+    val refPairs = spark.read.parquet(refPath)
       .select(Text.tokens(col(textCol)).as("__ts"))
       .filter(size(col("__ts")) >= 2)
       .select(explode(expr(bigramSql)).as("__p"))
       .select(col("__p.w1").as("__w1"), col("__p.bg").as("__bg"))
-      .cache()
-    val (c1Map, cbMap) = try {
+    val (c1Map, cbMap) = Ops.withPersisted(refPairs) { pairs =>
       val firsts = pairs.groupBy("__w1").agg(count(lit(1)).as("__c1"))
         .orderBy(col("__c1").desc, col("__w1").asc).limit(topV)
         .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
@@ -67,7 +67,7 @@ object LmGateOp extends OperatorFactory {
         .orderBy(col("__cb").desc, col("__bg").asc).limit(topB)
         .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
       (firsts, bigrams)
-    } finally pairs.unpersist()
+    }
     require(c1Map.nonEmpty,
       s"LmGateOp: reference corpus at $refPath has no bigrams")
     val v = c1Map.size.toLong

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 import graft.functions.Text
+import graft.operators.Ops
 import graft.streaming.OperatorFactory
 
 /** Streaming Naive-Bayes quality gate — the ingest-time face of
@@ -53,25 +54,26 @@ object NbGateOp extends OperatorFactory {
     // frozen model: two bounded collects (vocab ≤ topV rows; totals are
     // aggregates of the cached token frames, the corpora never reach
     // the driver row-wise)
-    val refToks = spark.read.parquet(refPath)
-      .select(explode(Text.tokens(col(refTextCol))).as("__w")).cache()
-    val corpusToks = spark.read.parquet(corpusPath)
-      .select(explode(Text.tokens(col(textCol))).as("__w")).cache()
-    val (cpMap, cnMap, np, nn) = try {
-      val cPos = refToks.groupBy("__w").agg(count(lit(1)).as("__cp"))
-      val cNeg = corpusToks.groupBy("__w").agg(count(lit(1)).as("__cn"))
-      val vocab = cPos.join(cNeg, Seq("__w"), "full_outer")
-        .select(col("__w"),
-          coalesce(col("__cp"), lit(0L)).as("__cp"),
-          coalesce(col("__cn"), lit(0L)).as("__cn"))
-        .orderBy((col("__cp") + col("__cn")).desc, col("__w").asc)
-        .limit(topV)
-        .collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2)))
-      val npv = refToks.count()
-      val nnv = corpusToks.count()
-      (vocab.map(v => v._1 -> v._2).toMap,
-        vocab.map(v => v._1 -> v._3).toMap, npv, nnv)
-    } finally { refToks.unpersist(); corpusToks.unpersist() }
+    def toks(path: String, c: String): DataFrame =
+      spark.read.parquet(path).select(explode(Text.tokens(col(c))).as("__w"))
+    val (cpMap, cnMap, np, nn) =
+      Ops.withPersisted(toks(refPath, refTextCol)) { refToks =>
+        Ops.withPersisted(toks(corpusPath, textCol)) { corpusToks =>
+          val cPos = refToks.groupBy("__w").agg(count(lit(1)).as("__cp"))
+          val cNeg = corpusToks.groupBy("__w").agg(count(lit(1)).as("__cn"))
+          val vocab = cPos.join(cNeg, Seq("__w"), "full_outer")
+            .select(col("__w"),
+              coalesce(col("__cp"), lit(0L)).as("__cp"),
+              coalesce(col("__cn"), lit(0L)).as("__cn"))
+            .orderBy((col("__cp") + col("__cn")).desc, col("__w").asc)
+            .limit(topV)
+            .collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2)))
+          val npv = refToks.count()
+          val nnv = corpusToks.count()
+          (vocab.map(v => v._1 -> v._2).toMap,
+            vocab.map(v => v._1 -> v._3).toMap, npv, nnv)
+        }
+      }
     require(cpMap.nonEmpty,
       s"NbGateOp: no tokens in $refPath + $corpusPath")
     val v = cpMap.size.toLong

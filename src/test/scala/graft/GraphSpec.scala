@@ -122,39 +122,39 @@ class GraphSpec extends SparkSpec {
     assert(once == five)
   }
 
-  test("checkpointEvery truncates lineage without changing a single " +
-    "rank bit (pageRank iters=10, hits iters=6)") {
+  test("pageRank and hits truncate their own lineage: plan size is " +
+    "independent of iters, and ranks past a truncation match an exact " +
+    "replay") {
     // a 60-node random-ish graph: id -> (id*7+1)%60 and id -> (id*13+5)%60
-    val edges = (0L until 60L).flatMap(i =>
+    val el = (0L until 60L).flatMap(i =>
       Seq(i -> ((i * 7 + 1) % 60), i -> ((i * 13 + 5) % 60)))
-      .toDF("src", "dst")
-    // equality pins run at modest depth (the arithmetic is iteration-
-    // uniform, so equality at 5 implies equality at any depth); the
-    // full-suite JVM shares heap with 38 other suites and the PLAIN
-    // plans are exactly the lineage blowup this seam removes
-    val plain = Graph.pageRank(edges, "src", "dst", iters = 5,
-      scale = S).as[(Long, Long)].collect().toMap
-    val cp = Graph.pageRank(edges, "src", "dst", iters = 5,
-      scale = S, checkpointEvery = 2).as[(Long, Long)].collect().toMap
-    assert(plain == cp)
-    // deep run through the seam only
-    assert(Graph.pageRank(edges, "src", "dst", iters = 10, scale = S,
-      checkpointEvery = 3).count() == 60L)
-    // hits lineage multiplies ~4x per iteration (each rescale
-    // references its input twice), so the PLAIN side stays at iters=2
-    // — measured: plain iters=3 17.8s, iters=4 OOMs an 8 GB driver
-    // merely RENDERING its plan string; checkpointed iters=3 is 1.5s,
-    // which is exactly the failure mode checkpointEvery exists for
-    val hPlain = Graph.hits(edges, "src", "dst", iters = 2, scale = S)
-      .as[(Long, Long, Long)].collect().toSet
-    val hCp = Graph.hits(edges, "src", "dst", iters = 2, scale = S,
-      checkpointEvery = 1).as[(Long, Long, Long)].collect().toSet
-    assert(hPlain == hCp)
-    // deep hits runs ONLY with the seam: iters=8, checkpointEvery=2
-    // completes (measured 4.1s) where the unchckpointed plan could not
-    // even be rendered
-    assert(Graph.hits(edges, "src", "dst", iters = 8, scale = S,
-      checkpointEvery = 2).count() == 60L)
+    val edges = el.toDF("src", "dst")
+    def leaves(df: org.apache.spark.sql.DataFrame): Int =
+      df.queryExecution.analyzed.collectLeaves().size
+    // hits checkpoints both frames every level, so any depth plans the
+    // same; pageRank truncates every 4th level, so iters 6 and 10 both
+    // sit two levels above a truncation (levels 4 and 8)
+    assert(leaves(Graph.hits(edges, "src", "dst", iters = 2, scale = S)) ==
+      leaves(Graph.hits(edges, "src", "dst", iters = 8, scale = S)))
+    assert(leaves(Graph.pageRank(edges, "src", "dst", iters = 6,
+      scale = S)) == leaves(Graph.pageRank(edges, "src", "dst",
+      iters = 10, scale = S)))
+    // driver replay of the fixed-point iteration (multi-edges collapse
+    // by summed weight, floor division throughout)
+    val w = el.groupBy(identity).map { case (e, es) => e -> es.size.toLong }
+    val outw = w.groupBy(_._1._1).map { case (n, es) => n -> es.values.sum }
+    val base = (15 * S) / 100
+    var r = (0L until 60L).map(_ -> S).toMap
+    for (_ <- 1 to 6) {
+      val sums = w.toSeq.map { case ((a, b), k) => b -> r(a) * k / outw(a) }
+        .groupBy(_._1).map { case (n, cs) => n -> cs.map(_._2).sum }
+      r = r.map { case (n, _) =>
+        n -> (base + sums.get(n).map(_ * 85 / 100).getOrElse(0L)) }
+    }
+    assert(Graph.pageRank(edges, "src", "dst", iters = 6, scale = S)
+      .as[(Long, Long)].collect().toMap == r)
+    assert(Graph.hits(edges, "src", "dst", iters = 8, scale = S)
+      .count() == 60L)
   }
 
   test("transitionEdges: consecutive per-user pairs, singletons none") {

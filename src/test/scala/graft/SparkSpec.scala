@@ -17,6 +17,7 @@ object TestSpark {
       .config("spark.ui.enabled", "false")
       .config("spark.sql.codegen.cache.maxEntries", // static, as above
         graft.core.GraftSession.CodegenCacheEntries)
+      .config("spark.sql.codegen.useIdInClassName", "false")
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     s

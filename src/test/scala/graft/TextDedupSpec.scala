@@ -302,6 +302,23 @@ class TextDedupSpec extends SparkSpec {
     assert(fast.nonEmpty)
   }
 
+  test("components: on a 20-node path the distributed plan does not " +
+    "grow with maxIters, and the converged labels match union-find") {
+    // the path needs 19 rounds, so maxIters binds at 2 and at 4; an
+    // untruncated loop doubles its plan every round (7 vs 31 leaves)
+    val path = (0L until 19L).map(i => (i, i + 1)).toDF("id_a", "id_b")
+    def leaves(maxIters: Int): Int = Dedup.components(path, "id_a", "id_b",
+      maxIters = maxIters, driverEdgeCap = 0)
+      .queryExecution.analyzed.collectLeaves().size
+    assert(leaves(2) == leaves(4))
+    val fast = Dedup.components(path, "id_a", "id_b")
+      .as[(Long, Long)].collect().toSet
+    val dist = Dedup.components(path, "id_a", "id_b", driverEdgeCap = 0)
+      .as[(Long, Long)].collect().toSet
+    assert(dist == fast)
+    assert(fast == (0L until 20L).map(_ -> 0L).toSet)
+  }
+
   test("dropNearDuplicates keeps one representative per component and " +
     "all unpaired rows") {
     val docs = Seq.tabulate(8)(i => (i.toLong, s"doc $i"))
