@@ -10,26 +10,17 @@ object Bench {
     // tables parallel) — graft.core.Measure, one definition for every
     // timed main
     val spark = core.Measure.session(core.Measure.cpus)
-    // Untimed warmup: one representative per codegen family, so the
+    // Untimed warmup: the first case of every query family, so the
     // first timed query of each family does not pay the JVM's one-time
     // JIT and class-loading cost (measured round 1: ~50s of the 104s
     // total was first-touch; e.g. q_simhash_pairs 25.1s cold vs 1.9s
     // warm). It does not spare the first sweep whole-stage-codegen
     // compiles: generated classes are per plan, and only the second
     // sweep finds them cached (`codegen_compiles` counts the compiles
-    // of all timed sweeps). Families: scan/agg, filter, broadcast join,
-    // HOF/text shingles, MinHash, SimHash, RHP/LSH, IVF, json codec,
-    // WindowExec, sequential-fold EWMA, as-of join.
-    Seq("q_agg", "q_filter", "q_join_revenue",
-        "q_ngram_jaccard", "q_minhash_pairs", "q_simhash_pairs",
-        "q_embed_neardup_lsh", "q_simsearch_lsh", "q_simsearch_ivf",
-        "q_json_codec", "q_roll_mean", "q_ewma", "q_asof",
-        "q_dedup_clusters",
-        // round-10 kernel families: SQ encode/ADC, fused language ID
-        "q_sq_search", "q_langid").foreach { n =>
-      SparkEntry.queries.get(n).foreach { fn =>
-        try fn(spark, sfDir).count() catch { case _: Throwable => () }
-      }
+    // of all timed sweeps).
+    SparkEntry.families.foreach { f =>
+      try f.cases.head.run(spark, sfDir).count()
+      catch { case _: Throwable => () }
     }
     // min over LOAD-ROBUST iterations. Round-8 lesson: back-to-back
     // min-of-2 on one query puts both iterations inside the same

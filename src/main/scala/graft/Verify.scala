@@ -10,7 +10,6 @@ object Verify {
     val Array(sfDir, outDir) = args.take(2)
     val only: Option[Set[String]] =
       if (args.length > 2) Some(args(2).split(",").toSet) else None
-    val fastMode = sys.env.get("SPARK_GRAFT_FAST").contains("1")
     val cpus = core.Measure.cpus
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the
@@ -41,7 +40,7 @@ object Verify {
     Files.writeString(Paths.get(s"$outDir/_verify_env.json"),
       s"""{"cwd":${q(new java.io.File(".").getCanonicalPath)},""" +
         s""""java":${q(System.getProperty("java.version"))},""" +
-        s""""free_disk_mb":$free,"cpus":${q(cpus)},"fast":$fastMode,""" +
+        s""""free_disk_mb":$free,"cpus":${q(cpus)},""" +
         s""""args":${args.map(q).mkString("[", ",", "]")}}""" + "\n")
     // the SHARED measurement session (core.Measure.session) — a
     // verbatim inline copy here is exactly the drift the Measure module
@@ -89,31 +88,12 @@ object Verify {
         // row order is provably stable run-to-run regardless of partition
         // layout (a row-order-sensitive hash on the driver side otherwise
         // sees whatever order the final exchange produced).
-        //
-        // SPARK_GRAFT_FAST=1 (r14 verdict task 2, opt-in, default OFF):
-        // skip the defensive sort where the query's own analyzed plan
-        // already ends in a GLOBAL Sort — there EliminateSorts removes
-        // the query's sort under ours anyway (one sort runs either
-        // way), so the fork trades the all-columns total order for the
-        // query's own declared order. Safe for a driver that canon-
-        // sorts rows before hashing (ours does — check_oracle.py
-        // replicates it). MEASURED r15 at sf0.01: 199s vs 201s
-        // sbt-to-exit, all 240 outputs canon-identical — the sort is
-        // NOT where Verify's wall time lives (planning + tiny
-        // coalesce(1) writes are), so the default stays the provably
-        // order-stable artifact; the flag remains for a driver whose
-        // patience is ever within 1% of Verify's runtime.
         import org.apache.spark.sql.functions.col
-        val querySorted = out.queryExecution.analyzed match {
-          case s: org.apache.spark.sql.catalyst.plans.logical.Sort =>
-            s.global
-          case _ => false
-        }
         val orderable = out.schema.fields.filter(f =>
           org.apache.spark.sql.catalyst.expressions.RowOrdering
             .isOrderable(f.dataType)).map(f => col(f.name)).toIndexedSeq
         val stable =
-          if (orderable.isEmpty || (fastMode && querySorted)) out
+          if (orderable.isEmpty) out
           else out.orderBy(orderable: _*)
         stable.coalesce(1).write.mode("overwrite")
           .parquet(s"$outDir/$name")

@@ -2,7 +2,8 @@ package graft.llm
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
+
+import graft.operators.Ops
 
 /** Graph centrality over corpus-derived graphs — the quality-weighting
   * leg of web-corpus curation (Common Crawl ranks hosts by centrality
@@ -65,7 +66,10 @@ object Graph {
     * `weightCol` is None). Returns (node, rank) covering every node
     * that appears as a src or dst; ranks are fixed-point longs
     * (rank/scale ≈ the float PageRank value under the unnormalized
-    * "every node starts at 1.0" convention).
+    * "every node starts at 1.0" convention). The result is an eager
+    * local checkpoint, and every frame the call persists is released
+    * before it returns, so a second identical call recomputes instead
+    * of reading the first call's caches.
     *
     * @param iters full power iterations (each = 1 join + 1 groupBy);
     *              iters = 0 returns the uniform start vector.
@@ -96,54 +100,55 @@ object Graph {
     // be expensive (q_pagerank_docs feeds a full ngram-Jaccard pair
     // generation — without this persist that subtree re-ran up to 8×,
     // measured 3.5s → 1.4s at sf0.1)
-    val e0 = edges
+    val grouped = edges
       .filter(col(srcCol).isNotNull && col(dstCol).isNotNull)
       .select(col(srcCol).as("__src"), col(dstCol).as("__dst"), w.as("__w"))
       .groupBy("__src", "__dst").agg(sum("__w").as("__w"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val outw = e0.groupBy("__src").agg(sum("__w").as("__ow"))
-    // edge frame pre-joined with its src's out-weight: reused every
-    // iteration, so persist once (at cluster scale this is the big
-    // frame — one shuffle to build, then each iteration joins it
-    // against the |V|-row rank frame).
-    val ej = e0.join(outw, "__src")
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val nodes0 = e0.select(col("__src").as("node"))
-      .union(e0.select(col("__dst").as("node")))
-      .distinct()
-    val base = ((dampDen - dampNum) * scale) / dampDen // exact: ints
-    // per-node teleport term: `base` everywhere (classic) or only on
-    // the seed set (personalized) — joined once, rides the rank frame
-    val nodes = (seeds match {
-      case Some(sd) =>
-        val sdf = sd.toDF("node").distinct()
-        nodes0.join(sdf.withColumn("__seed", lit(true)), Seq("node"),
-          "left")
-          .select(col("node"),
-            when(col("__seed"), lit(base)).otherwise(lit(0L))
-              .as("__base"))
-      case None => nodes0.withColumn("__base", lit(base))
-    }).persist(StorageLevel.MEMORY_AND_DISK)
-
-    // every level stays persisted until the returned frame is dropped
-    // (ContextCleaner reclaims; memory held is iters · |V| rows) — the
-    // in-loop materialize+unpersist barriers cost a full job each and
-    // bought nothing at realistic iteration counts.
-    var ranks = nodes.select(col("node"), lit(scale).as("rank"))
-    for (i <- 1 to iters) {
-      val sums = ej.join(ranks, ej("__src") === ranks("node"))
-        .select(col("__dst"),
-          expr("(rank * __w) div __ow").as("__c"))
-        .groupBy("__dst").agg(sum("__c").as("__s"))
-      val next = nodes.join(sums, nodes("node") === sums("__dst"), "left")
-        .select(col("node"),
-          (col("__base") + coalesce(
-            expr(s"(__s * $dampNum) div $dampDen"), lit(0L))).as("rank"))
-      ranks =
-        if (i % PageRankTruncateEvery == 0) next.localCheckpoint()
-        else next.persist(StorageLevel.MEMORY_AND_DISK)
+    Ops.withPersisted(grouped) { e0 =>
+      val outw = e0.groupBy("__src").agg(sum("__w").as("__ow"))
+      val nodes0 = e0.select(col("__src").as("node"))
+        .union(e0.select(col("__dst").as("node")))
+        .distinct()
+      val base = ((dampDen - dampNum) * scale) / dampDen // exact: ints
+      // per-node teleport term: `base` everywhere (classic) or only on
+      // the seed set (personalized) — joined once, rides the rank frame
+      val withBase = seeds match {
+        case Some(sd) =>
+          val sdf = sd.toDF("node").distinct()
+          nodes0.join(sdf.withColumn("__seed", lit(true)), Seq("node"),
+            "left")
+            .select(col("node"),
+              when(col("__seed"), lit(base)).otherwise(lit(0L))
+                .as("__base"))
+        case None => nodes0.withColumn("__base", lit(base))
+      }
+      // edge frame pre-joined with its src's out-weight: reused every
+      // iteration (at cluster scale this is the big frame — one shuffle
+      // to build, then each iteration joins it against the |V|-row
+      // rank frame)
+      Ops.withPersisted(e0.join(outw, "__src")) { ej =>
+        Ops.withPersisted(withBase) { nodes =>
+          var ranks = nodes.select(col("node"), lit(scale).as("rank"))
+          for (i <- 1 to iters) {
+            val sums = ej.join(ranks, ej("__src") === ranks("node"))
+              .select(col("__dst"),
+                expr("(rank * __w) div __ow").as("__c"))
+              .groupBy("__dst").agg(sum("__c").as("__s"))
+            val next = nodes.join(sums, nodes("node") === sums("__dst"),
+              "left")
+              .select(col("node"),
+                (col("__base") + coalesce(
+                  expr(s"(__s * $dampNum) div $dampDen"), lit(0L)))
+                  .as("rank"))
+            ranks =
+              if (i < iters && i % PageRankTruncateEvery == 0)
+                next.localCheckpoint()
+              else next
+          }
+          ranks.localCheckpoint()
+        }
+      }
     }
-    ranks
   }
 
   /** Per-user event-type transition edges — the click-graph builder:
@@ -176,7 +181,9 @@ object Graph {
     * (broadcast). Nodes without in-edges get authority 0; without
     * out-edges hub 0. Start: h = scale everywhere.
     *
-    * Output: (node, hub, authority) as fixed-point longs. */
+    * Output: (node, hub, authority) as fixed-point longs, joined from
+    * the last level's two local checkpoints; the frames the call
+    * persists are released before it returns. */
   def hits(edges: DataFrame, srcCol: String, dstCol: String,
            weightCol: Option[String] = None, iters: Int = 2,
            scale: Long = 1000000000L): DataFrame = {
@@ -184,51 +191,53 @@ object Graph {
     require(scale > 0, s"scale must be positive: $scale")
     val w = weightCol.map(c => integralWeight(col(c), "hits"))
       .getOrElse(lit(1L))
-    val e0 = edges
+    val grouped = edges
       .filter(col(srcCol).isNotNull && col(dstCol).isNotNull)
       .select(col(srcCol).as("__src"), col(dstCol).as("__dst"), w.as("__w"))
       .groupBy("__src", "__dst").agg(sum("__w").as("__w"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val nodes = e0.select(col("__src").as("node"))
-      .union(e0.select(col("__dst").as("node")))
-      .distinct()
-      .persist(StorageLevel.MEMORY_AND_DISK)
+    Ops.withPersisted(grouped) { e0 =>
+      val allNodes = e0.select(col("__src").as("node"))
+        .union(e0.select(col("__dst").as("node")))
+        .distinct()
+      Ops.withPersisted(allNodes) { nodes =>
+        // rescale a raw score frame (node, __r DECIMAL) to max = scale,
+        // keeping node coverage complete (missing nodes -> 0). Raw mass
+        // and the rescale multiply run in exact DECIMAL(38,0) — rank·w
+        // sums and r·scale both overflow longs on heavy graphs — and the
+        // integral `div` lands the result back in the long domain
+        // exactly (the DuckDB replay does the same arithmetic in HUGEINT).
+        def rescaled(raw: DataFrame): DataFrame = {
+          val zero = lit(java.math.BigDecimal.ZERO).cast("decimal(38,0)")
+          val full = nodes.join(raw, Seq("node"), "left")
+            .select(col("node"), coalesce(col("__r"), zero).as("__r"))
+          val mx = full.agg(max("__r").as("__mx"))
+          full.crossJoin(broadcast(mx))
+            .select(col("node"),
+              when(col("__mx") > 0,
+                expr(s"(__r * $scale) div __mx")).otherwise(lit(0L))
+                .as("rank"))
+        }
+        def massToward(ranks: DataFrame, edgeEnd: String, groupEnd: String)
+            : DataFrame =
+          e0.join(ranks, e0(edgeEnd) === ranks("node"))
+            .select(col(groupEnd).as("node"),
+              (col("rank").cast("decimal(38,0)") * col("__w")).as("__c"))
+            .groupBy("node").agg(sum("__c").as("__r"))
 
-    // rescale a raw score frame (node, __r DECIMAL) to max = scale,
-    // keeping node coverage complete (missing nodes -> 0). Raw mass
-    // and the rescale multiply run in exact DECIMAL(38,0) — rank·w
-    // sums and r·scale both overflow longs on heavy graphs — and the
-    // integral `div` lands the result back in the long domain exactly
-    // (the DuckDB replay does the same arithmetic in HUGEINT).
-    def rescaled(raw: DataFrame): DataFrame = {
-      val zero = lit(java.math.BigDecimal.ZERO).cast("decimal(38,0)")
-      val full = nodes.join(raw, Seq("node"), "left")
-        .select(col("node"), coalesce(col("__r"), zero).as("__r"))
-      val mx = full.agg(max("__r").as("__mx"))
-      full.crossJoin(broadcast(mx))
-        .select(col("node"),
-          when(col("__mx") > 0,
-            expr(s"(__r * $scale) div __mx")).otherwise(lit(0L))
-            .as("rank"))
+        // checkpoint both frames every level: each rescale reads its
+        // input twice, so the plan would grow ~4x per iteration
+        var hubs = nodes.select(col("node"), lit(scale).as("rank"))
+        var auths: DataFrame = null
+        for (_ <- 1 to iters) {
+          auths = rescaled(massToward(hubs, "__src", "__dst")).localCheckpoint()
+          hubs = rescaled(massToward(auths, "__dst", "__src")).localCheckpoint()
+        }
+        // both checkpoints hold every node exactly once, so the result
+        // needs neither persisted input
+        hubs.withColumnRenamed("rank", "hub")
+          .join(auths.withColumnRenamed("rank", "authority"), "node")
+      }
     }
-    def massToward(ranks: DataFrame, edgeEnd: String, groupEnd: String)
-        : DataFrame =
-      e0.join(ranks, e0(edgeEnd) === ranks("node"))
-        .select(col(groupEnd).as("node"),
-          (col("rank").cast("decimal(38,0)") * col("__w")).as("__c"))
-        .groupBy("node").agg(sum("__c").as("__r"))
-
-    // checkpoint both frames every level: each rescale reads its input
-    // twice, so the plan would grow ~4x per iteration
-    var hubs = nodes.select(col("node"), lit(scale).as("rank"))
-    var auths: DataFrame = null
-    for (_ <- 1 to iters) {
-      auths = rescaled(massToward(hubs, "__src", "__dst")).localCheckpoint()
-      hubs = rescaled(massToward(auths, "__dst", "__src")).localCheckpoint()
-    }
-    nodes
-      .join(hubs.withColumnRenamed("rank", "hub"), "node")
-      .join(auths.withColumnRenamed("rank", "authority"), "node")
   }
 
   /** Markov transition matrix of an edge frame: per (src, dst) the

@@ -42,6 +42,29 @@ class DevSpec extends SparkSpec {
     assert(SparkEntry.queries eq SparkEntry.queries)
   }
 
+  test("SparkEntry.oracleSql is built once") {
+    assert(SparkEntry.oracleSql eq SparkEntry.oracleSql)
+  }
+
+  test("the registry rejects a query name registered by two families") {
+    def family(names: String*): queries.Family = new queries.Family {
+      val cases = names.map(n => queries.Case(n, (s, _) => s.emptyDataFrame,
+        None))
+    }
+    val ex = intercept[IllegalArgumentException](SparkEntry.registry(
+      Seq(family("q_a", "q_b"), family("q_c", "q_a"))))
+    assert(ex.getMessage.contains("q_a"), ex.getMessage)
+    assert(!ex.getMessage.contains("q_b"), ex.getMessage)
+    assert(SparkEntry.registry(Seq(family("q_a"), family("q_b")))
+      .map(_.name) == Seq("q_a", "q_b"))
+  }
+
+  test("every case but the three engine-internal sketches has an oracle") {
+    assert(SparkEntry.cases.size == SparkEntry.queries.size)
+    assert(SparkEntry.cases.filter(_.oracle.isEmpty).map(_.name).toSet ==
+      Set("q_approx_distinct", "q_distogram", "q_heavy_hitters"))
+  }
+
   test("SPARK_GRAFT_CONF: ';' separates and keeps commas in values; ',' " +
     "separates only without ';'; malformed entries are skipped") {
     assert(Dev.confPairs("a=1;spark.sql.optimizer.excludedRules=x,y;;=z;b") ==

@@ -131,9 +131,8 @@ class GraphSpec extends SparkSpec {
     val edges = el.toDF("src", "dst")
     def leaves(df: org.apache.spark.sql.DataFrame): Int =
       df.queryExecution.analyzed.collectLeaves().size
-    // hits checkpoints both frames every level, so any depth plans the
-    // same; pageRank truncates every 4th level, so iters 6 and 10 both
-    // sit two levels above a truncation (levels 4 and 8)
+    // hits checkpoints both frames every level and pageRank returns a
+    // local checkpoint, so any depth plans the same
     assert(leaves(Graph.hits(edges, "src", "dst", iters = 2, scale = S)) ==
       leaves(Graph.hits(edges, "src", "dst", iters = 8, scale = S)))
     assert(leaves(Graph.pageRank(edges, "src", "dst", iters = 6,
@@ -155,6 +154,25 @@ class GraphSpec extends SparkSpec {
       .as[(Long, Long)].collect().toMap == r)
     assert(Graph.hits(edges, "src", "dst", iters = 8, scale = S)
       .count() == 60L)
+  }
+
+  test("pageRank and hits leave no cached frame behind") {
+    val edges = (0L until 20L).flatMap(i =>
+      Seq(i -> ((i * 3 + 1) % 20), i -> ((i * 7 + 2) % 20)))
+      .toDF("src", "dst")
+    val cache = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+      .sharedState.cacheManager
+    spark.catalog.clearCache()
+    // iters = 6 also truncates once inside the loop (level 4)
+    assert(Graph.pageRank(edges, "src", "dst", iters = 6, scale = S)
+      .count() == 20L)
+    assert(cache.isEmpty)
+    assert(Graph.pageRank(edges, "src", "dst", iters = 2, scale = S,
+      seeds = Some(Seq(0L, 5L).toDF("node"))).count() == 20L)
+    assert(cache.isEmpty)
+    assert(Graph.hits(edges, "src", "dst", iters = 2, scale = S)
+      .count() == 20L)
+    assert(cache.isEmpty)
   }
 
   test("transitionEdges: consecutive per-user pairs, singletons none") {

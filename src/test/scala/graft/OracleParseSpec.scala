@@ -2,9 +2,9 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Every emitted oracle — in particular the allowlisted ones whose CTEs
-  * are rewritten `AS MATERIALIZED` by [[SparkEntry.oracleSql]]'s regex
-  * pass — must still be valid DuckDB SQL. The rewrite is a bare regex
+/** Every emitted oracle — in particular the `materializeCtes` cases whose
+  * CTEs are rewritten `AS MATERIALIZED` by [[queries.Case.oracleSql]]'s
+  * regex pass — must still be valid DuckDB SQL. The rewrite is a bare regex
   * over the SQL text; an oracle containing `ident AS (` in an
   * unexpected position (string literal, WINDOW clause) could be
   * silently corrupted and only surface as a red driver row a round
@@ -12,7 +12,7 @@ import org.scalatest.funsuite.AnyFunSuite
   *
   *  - PARSE every oracle (duckdb.extract_statements — the driver-side
   *    engine's own parser; ~0.3s for all 220);
-  *  - EXPLAIN-bind the materialize-allowlisted ones against views over
+  *  - EXPLAIN-bind the `materializeCtes` ones against views over
   *    the sf0.001 tables with the optimizer disabled (~10s; full-EXPLAIN
   *    over all 220 costs ~2 minutes in macro expansion, measured).
   *
@@ -27,6 +27,10 @@ class OracleParseSpec extends AnyFunSuite {
         .redirectErrorStream(true).start()
       p.waitFor() == 0
     } catch { case _: Throwable => false }
+
+  /** The cases whose oracle CTEs are rewritten `AS MATERIALIZED`. */
+  private def materialized: Seq[String] =
+    SparkEntry.cases.filter(_.materializeCtes).map(_.name).sorted
 
   // the same escaping contract as Verify's oracle_sql.json emission
   private def jq(s: String): String = "\"" + s.flatMap {
@@ -47,12 +51,12 @@ class OracleParseSpec extends AnyFunSuite {
       s"$sf testdata not present")
 
     val oracles = SparkEntry.oracleSql
-    // sanity: the allowlist only names queries that exist, and each
+    // sanity: every materializeCtes case has an oracle, and each
     // rewrite actually took effect
-    SparkEntry.MaterializedCteOracles.foreach { n =>
-      assert(oracles.contains(n), s"allowlisted oracle missing: $n")
+    materialized.foreach { n =>
+      assert(oracles.contains(n), s"materializeCtes oracle missing: $n")
       assert(oracles(n).contains(" AS MATERIALIZED ("),
-        s"$n allowlisted but no CTE was materialized")
+        s"$n sets materializeCtes but no CTE was materialized")
     }
 
     val json = oracles.map { case (k, v) => s"${jq(k)}: ${jq(v)}" }
@@ -62,7 +66,7 @@ class OracleParseSpec extends AnyFunSuite {
     // ladders from the parsed PSL) and q_drift_dag (seed-chained XXH64
     // bucket macro + TVD grid) — a generator bug should fail binding
     // here, not a driver round later
-    val allowJson = (SparkEntry.MaterializedCteOracles.toSeq ++
+    val allowJson = (materialized ++
       Seq("q_url_psl", "q_drift_dag")).sorted.map(jq)
       .mkString("[", ",", "]")
     val dir = java.nio.file.Files.createTempDirectory("oracle-parse")
@@ -120,7 +124,7 @@ class OracleParseSpec extends AnyFunSuite {
     * with a spill directory. The round-11 board went red on four
     * oracle-side OOMs that the parse/bind tiers cannot see — peak
     * memory is a property of execution, not of the plan. Every
-    * MaterializedCteOracles member (which includes all four r11 reds)
+    * `materializeCtes` case (which includes all four r11 reds)
     * must complete under the cap; a regression that re-inflates an
     * oracle's working set now fails `sbt test` instead of a driver
     * round later. */
@@ -132,7 +136,7 @@ class OracleParseSpec extends AnyFunSuite {
       s"$sf testdata not present")
 
     val oracles = SparkEntry.oracleSql
-    val names = SparkEntry.MaterializedCteOracles.toSeq.sorted
+    val names = materialized
     val json = names.map(n => s"${jq(n)}: ${jq(oracles(n))}")
       .mkString("{", ",", "}")
     val dir = java.nio.file.Files.createTempDirectory("oracle-exec")

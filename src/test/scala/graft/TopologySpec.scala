@@ -952,7 +952,7 @@ class TopologySpec extends SparkSpec {
     // the crawl frontier: documents + their (synthetic) URLs — the same
     // frame q_pipeline_crawl starts from
     graft.core.Tables.table(spark, sfDir, "documents")
-      .withColumn("url", SparkEntry.synthUrl)
+      .withColumn("url", queries.UrlCuration.synthUrl)
       .write.mode("overwrite").parquet(s"$tmp/frontier")
     val yaml =
       s"""topics:
