@@ -2,12 +2,14 @@ package graft
 
 import org.apache.spark.graftbridge.ListenerDrain
 import org.apache.spark.scheduler._
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.functions.{col, lit}
 import scala.collection.mutable
 
-/** The dev CLI: time, A/B, explain and profile `SparkEntry.queries` on
-  * the measurement session (`core.Measure`), so its plans and timings are
-  * the ones Bench and Verify see. `<qs>` is a comma-separated query list.
+/** The dev CLI: time, A/B, explain and profile `SparkEntry.queries`, and
+  * run the scale and streaming sweeps, on the measurement session
+  * (`core.Measure`), so its plans and timings are the ones Bench and
+  * Verify see. `<qs>` is a comma-separated query list.
   *
   * {{{
   * runMain graft.Dev time <sfDir> <qs> [n]          warm once, then n timed passes (default 2)
@@ -15,6 +17,8 @@ import scala.collection.mutable
   * runMain graft.Dev explain <sfDir> <qs> [mode]    the plan before execution (default formatted)
   * runMain graft.Dev explain-final <sfDir> <qs>     the final (post-AQE) plan, after one run
   * runMain graft.Dev profile <sfDir> <qs>           job and stage table of one warm run
+  * runMain graft.Dev scale <sfDir> <factor> <out>   scale tier: sfDir vs its derived factor-x corpus
+  * runMain graft.Dev stream <scaledDir> <out>       streaming tier over a derived corpus
   * }}}
   *
   * `SPARK_GRAFT_CPUS` sets local[N] and the shuffle partitions (default
@@ -22,14 +26,15 @@ import scala.collection.mutable
   * confs to the builder, so static confs apply too. */
 object Dev {
 
-  private val commands = Set("time", "ab", "explain", "explain-final",
-    "profile")
+  /** Each subcommand with its least argument count, itself included. */
+  private val arity = Map("time" -> 3, "ab" -> 4, "explain" -> 3,
+    "explain-final" -> 3, "profile" -> 3, "scale" -> 4, "stream" -> 3)
 
   def main(args: Array[String]): Unit = {
-    if (args.length < 3 || !commands.contains(args(0)) ||
-        (args(0) == "ab" && args.length < 4)) {
-      System.err.println(
-        s"usage: graft.Dev <${commands.mkString("|")}> <sfDir> <qs> [...]")
+    if (!args.headOption.flatMap(arity.get).exists(args.length >= _)) {
+      System.err.println("usage: graft.Dev " +
+        "<time|ab|explain|explain-final|profile> <sfDir> <qs> [...] | " +
+        "scale <sfDir> <factor> <out> | stream <scaledDir> <out>")
       sys.exit(2)
     }
     val b = core.Measure.builder(core.Measure.cpus)
@@ -59,6 +64,8 @@ object Dev {
     val sfDir = args(1)
     val names = args(2).split(",").toSeq
     args(0) match {
+      case "scale" => scale(spark, sfDir, args(2).toInt, args(3))
+      case "stream" => stream(spark, sfDir, args(2))
       case "time" =>
         time(spark, sfDir, names, args.lift(3).fold(2)(_.toInt))
       case "ab" =>
@@ -190,5 +197,183 @@ object Dev {
         f"sr=${s.shufRead / 1024}%8dKB sw=${s.shufWrite / 1024}%8dKB " +
         f"rows(in=${s.inRows}%d,out=${s.outRows}%d) ${s.name}%s")
     }
+  }
+
+  /** The measured scale tier (see [[ScaleSweep]]): derives the
+    * `factor`x corpus of `baseDir`, times `queries` on both corpora by
+    * Bench's protocol ([[Bench.Timer]], one wait `budget` for the run),
+    * and writes each query's seconds per tier, ratio, scaling exponent
+    * and verdict to `out`. A query that throws on either tier records
+    * -1 and verdict FAILED instead of killing the run (the finished
+    * corpus and small tier are kept; ScaleOutSpec rejects the row). */
+  def scale(spark: SparkSession, baseDir: String, factor: Int, out: String,
+            queries: Seq[String] = ScaleSweep.SweepQueries,
+            budget: core.Measure.WaitBudget =
+              new core.Measure.WaitBudget(300000L)): Unit = {
+    require(factor >= 2 && factor <= 125,
+      s"replication factor 2..125 (permFor distinctness), got $factor")
+    val scaledDir = ScaleSweep.scaledDirFor(baseDir, factor)
+    ScaleSweep.generate(spark, baseDir, scaledDir, factor)
+    queries.foreach(n => // untimed warmup (JIT), as in Bench
+      try SparkEntry.queries(n)(spark, baseDir).count()
+      catch { case e: Throwable => System.err.println(s"warmup $n: $e") })
+    def tier(dir: String): Map[String, Double] = {
+      val timer = new Bench.Timer(spark, dir, budget)
+      val samples = timer.sweep(queries)
+      timer.failures.foreach { case (n, m) =>
+        System.err.println(s"scale: $n FAILED at $dir: $m") }
+      queries.map(n => n -> (if (timer.failures.contains(n)) -1.0
+        else samples(n).min)).toMap
+    }
+    // the quiet-box gate before each tier: corpus generation ramps the
+    // 1-min load average, and an inflated small tier COMPRESSES every
+    // ratio (the first committed run measured q_hits at 0.86x)
+    core.Measure.awaitQuietBox(budget)
+    val loadBefore = core.Measure.loadAvg
+    val small = tier(baseDir)
+    core.Measure.awaitQuietBox(budget)
+    val big = tier(scaledDir)
+    val loadAfter = core.Measure.loadAvg
+    val bar = ScaleSweep.ratioBar(factor)
+    val ok = queries.filter(n => small(n) > 0 && big(n) > 0)
+    val rows = queries.map { n =>
+      val r = if (ok.contains(n)) big(n) / small(n) else -1.0
+      val note =
+        if (r < 0) "FAILED" else if (r > bar) "SUPER-LINEAR" else "ok"
+      if (note != "ok") System.err.println(
+        f"scale: $note $n ${small(n)}%.2fs -> ${big(n)}%.2fs ($r%.1fx)")
+      val exp = if (r < 0) -1.0 else math.log(r) / math.log(factor)
+      f""""$n":{"sf01_sec":${small(n)}%.3f,"sf1_sec":${big(n)}%.3f,"ratio":$r%.2f,"exponent":$exp%.3f,"verdict":"$note"}"""
+    }
+    val worst = ok.map(n => big(n) / small(n)).maxOption.getOrElse(-1.0)
+    core.Measure.writeArtifact(out,
+      s"""{"metric":"scale_ratio_worst","value":$worst,""" +
+        s""""unit":"x per ${factor}x data","factor":$factor,""" +
+        s""""ratio_bar":$bar,"load_before":$loadBefore,""" +
+        s""""load_after":$loadAfter,"queries":{${rows.mkString(",")}},""" +
+        s""""base":${core.Measure.jsonString(baseDir)},""" +
+        s""""scaled":${core.Measure.jsonString(scaledDir)}}""")
+  }
+
+  /** The measured streaming tier: four YAML topologies run through the
+    * real `Topology.runStream` path (file-stream micro-batches ->
+    * operator -> checkpointed parquet sink, nothing mocked) over the
+    * events and documents of a derived corpus (`scale`'s cache dir,
+    * 10x in the committed `stream_out.json`), writing rows, seconds and
+    * rows/s per topology to `out`:
+    *
+    *  - `map_stateless`: Multiply, the micro-batch pipeline floor
+    *    (source listing, codegen map, sink commit);
+    *  - `windowed_sketch`: CountMinOp, watermarked windowed aggregation
+    *    with mergeable sketch state;
+    *  - `stateful_neardup`: NearDupOp (verify) in the shipped
+    *    examples/neardup_topology.yaml tuning (`shuffle_partitions: 8`,
+    *    `max_per_trigger: 16`);
+    *  - `stateful_neardup_conservative`: the same op at
+    *    `max_per_trigger: 2` and the session's partitions. The gap to
+    *    the shipped row is the per-batch state-commit overhead;
+    *    MeasuredTierSpec fails if it vanishes.
+    *
+    * A row's time spans runStream() through processAllAvailable():
+    * wiring, every micro-batch and the sink commits. Each row is the
+    * min of two full sweeps (streaming rows swing ~1.5x run to run),
+    * both samples stamped, each after the quiet-box gate. */
+  def stream(spark: SparkSession, scaledDir: String, out: String,
+             budget: core.Measure.WaitBudget =
+               new core.Measure.WaitBudget(300000L)): Unit = {
+    require(new java.io.File(s"$scaledDir/events.parquet").exists,
+      s"no scaled corpus at $scaledDir — run graft.Dev scale first")
+    val partitions = spark.conf.get("spark.sql.shuffle.partitions")
+    val work = java.nio.file.Files
+      .createTempDirectory("graft_stream_sweep").toString
+    // re-sprayed into 16 files so max_per_trigger sets the micro-batch
+    // count (the scaled table's file count is a write-config accident)
+    def fixture(name: String, df: DataFrame): Long = {
+      df.repartition(16).write.mode("overwrite").parquet(s"$work/$name")
+      spark.read.parquet(s"$work/$name").count()
+    }
+    val evRows = fixture("events",
+      spark.read.parquet(s"$scaledDir/events.parquet")
+        .select("event_id", "ts", "user_id", "event_type", "value"))
+    val docRows = fixture("docs", // event time for the stateful windows
+      spark.read.parquet(s"$scaledDir/documents.parquet").select(
+        col("doc_id"), col("text"),
+        lit("2024-01-01 00:00:00").cast("timestamp").as("ts")))
+    // one parquet source -> one operator -> one parquet sink `sink`
+    def yaml(source: String, perTrigger: Int, windowed: Boolean,
+             factory: String, config: String, head: String = "")
+            (sink: String): String = {
+      val watermark =
+        if (windowed) "\n    timestamp_col: ts\n    watermark: 1 hour" else ""
+      s"""${head}topics:
+         |  - name: in
+         |    kind: parquet
+         |    path: $work/$source
+         |    max_per_trigger: $perTrigger$watermark
+         |  - name: $sink
+         |    kind: parquet
+         |    path: $work/$sink
+         |    sink_partitions: 4
+         |operators:
+         |  op:
+         |    factory: graft.streaming.ops.$factory
+         |    sources: [in]
+         |    sinks: [$sink]
+         |    config: $config
+         |""".stripMargin
+    }
+    val topologies: Seq[(String, Long, String => String)] = Seq(
+      ("map_stateless", evRows, yaml("events", 2, windowed = false,
+        "Multiply", "{multiply: 2}")),
+      ("windowed_sketch", evRows, yaml("events", 2, windowed = true,
+        "CountMinOp",
+        "{window: 1 hour, item_col: event_type, depth: 4, width: 1024}")),
+      ("stateful_neardup", docRows, yaml("docs", 16, windowed = true,
+        "NearDupOp", "{verify: true}", head = "shuffle_partitions: 8\n")),
+      ("stateful_neardup_conservative", docRows, yaml("docs", 2,
+        windowed = true, "NearDupOp", "{verify: true}")))
+    // Sink and checkpoint paths carry a per-run suffix: a streaming query
+    // must never resume another run's checkpoint. The topology-level
+    // shuffle_partitions is session-scoped, so it is reset before every
+    // run lest a tuned row leak its partitioning into the next.
+    def timed(name: String, yamlFor: String => String, sfx: String) = {
+      spark.conf.set("spark.sql.shuffle.partitions", partitions)
+      seconds {
+        val started = graft.streaming.Topology
+          .parse(yamlFor(s"out_$name$sfx"))
+          .runStream(spark, s"$work/ckpt_$name$sfx")
+        try started.foreach(_.processAllAvailable())
+        finally started.foreach(_.stop())
+      }
+    }
+    // untimed warmup: first-touch JIT/codegen of the micro-batch machinery
+    // (source listing, commit log, parquet sink) would otherwise land on
+    // the first timed row; each op's own codegen stays inside its row
+    timed("map_stateless", topologies.head._3, "_warmup")
+    val loadBefore = core.Measure.loadAvg
+    val sweeps = Seq("_a0", "_a1").map(sfx => topologies.map {
+      case (name, _, yamlFor) =>
+        core.Measure.awaitQuietBox(budget)
+        name -> timed(name, yamlFor, sfx)
+    }.toMap)
+    spark.conf.set("spark.sql.shuffle.partitions", partitions)
+    val loadAfter = core.Measure.loadAvg
+    val cells = topologies.map { case (name, rows, _) =>
+      val samples = sweeps.map(_(name))
+      val best = samples.min
+      System.err.println(f"stream $name: min $best%.1fs of " +
+        samples.map(x => f"$x%.1f").mkString("[", ", ", "]") +
+        f" = ${rows / best}%.0f rows/s")
+      (f""""$name":{"rows":$rows,"sec":$best%.2f,""" +
+        f""""rows_per_sec":${rows / best}%.0f,""" +
+        samples.map(x => f"$x%.2f").mkString("\"samples_sec\":[", ",", "]}"),
+        best)
+    }
+    core.Measure.writeArtifact(out,
+      s"""{"metric":"stream_total_sec","value":${cells.map(_._2).sum},""" +
+        s""""unit":"sec","load_before":$loadBefore,""" +
+        s""""load_after":$loadAfter,${cells.map(_._1).mkString(",")},""" +
+        s""""scaled":${core.Measure.jsonString(scaledDir)}}""")
+    org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(work))
   }
 }

@@ -11,18 +11,7 @@ object Verify {
     val only: Option[Set[String]] =
       if (args.length > 2) Some(args(2).split(",").toSet) else None
     val cpus = core.Measure.cpus
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
+    val q = core.Measure.jsonString _
     val outFile = new java.io.File(outDir)
     outFile.mkdirs()
     require(outFile.isDirectory && outFile.canWrite,
@@ -61,18 +50,16 @@ object Verify {
     // "overlap independent jobs"): the 240 queries are independent, each
     // ends in a tiny coalesce(1) write, and the serial loop left the box
     // idle between a query's driver-side planning and its short jobs
-    // (measured numbers: OPTIMIZATION_r16.md "Verify wall time") — byte-
-    // identical outputs (one shared session; per-query plans unchanged —
+    // (measured numbers: history/OPTIMIZATION_r16.md "Verify wall
+    // time") — byte-identical outputs (one shared session; per-query
+    // plans unchanged —
     // the only cross-query session state is idempotent temp-view
-    // registration of the same tables). Default 4 per the guide ("2-3 in
-    // flight is plenty" + one for planning overlap); SPARK_GRAFT_VERIFY_PAR
-    // overrides, =1 restores the serial loop.
-    val par = math.max(1, sys.env.get("SPARK_GRAFT_VERIFY_PAR")
-      .map(_.trim.toInt).getOrElse(4))
+    // registration of the same tables). 4 threads per the guide ("2-3 in
+    // flight is plenty" + one for planning overlap).
     val okCounter = new java.util.concurrent.atomic.AtomicInteger(0)
     val failedMap =
       new java.util.concurrent.ConcurrentHashMap[String, String]()
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(par)
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(4)
     val names = SparkEntry.queries.keys.toVector
       .filter(name => only.forall(_.contains(name)))
     val futures = names.map { name => pool.submit(new Runnable {
@@ -121,9 +108,7 @@ object Verify {
         // verdict records each round so Verify growth toward any driver
         // timeout is visible before it manifests as an empty artifact
         s""""wall_sec":${(System.nanoTime() - t0) / 1e9}}"""
-    Files.writeString(Paths.get(s"$outDir/_verify_summary.json"),
-      summary + "\n")
-    println(s"[verify] $summary")
+    core.Measure.writeArtifact(s"$outDir/_verify_summary.json", summary)
     // exit stays 0 even with per-query failures: a harness that gates
     // its compare on the return code must still compare the partial
     // (236 green rows + 4 loud failures beats an empty artifact);

@@ -2,12 +2,12 @@ package graft.core
 
 import org.apache.spark.sql.SparkSession
 
-/** Shared measurement-protocol pieces for the bench/sweep mains
-  * (graft.Bench, Verify, ScaleSweep, SkewSweep, StreamSweep) and the dev
-  * CLI (graft.Dev). One definition
-  * so a protocol change (gate threshold, session config) cannot
-  * silently leave the tiers running under different rules — the
-  * round-13 review found three verbatim copies drifting apart. */
+/** The measurement surface shared by `graft.Bench`, `graft.Verify` and
+  * the dev CLI `graft.Dev` (including its `scale` and `stream` sweeps):
+  * the session, the quiet-box gate and the JSON artifact writer. The
+  * timing protocol itself is `graft.Bench.Timer`. One definition, so a
+  * protocol change (gate threshold, session config, escaping) cannot
+  * leave one tier running under different rules. */
 object Measure {
 
   /** local[N] and shuffle partitions for every measured main:
@@ -59,5 +59,33 @@ object Measure {
       waited += step
     }
     waited
+  }
+
+  /** `s` as a JSON string literal: quote and backslash escaped, newline,
+    * carriage return and tab by name, every other control character as a
+    * four-hex-digit `u` escape.
+    * A path, SQL text or exception message must never make an artifact
+    * unparseable. */
+  def jsonString(s: String): String = "\"" + s.flatMap {
+    case '"'  => "\\\""
+    case '\\' => "\\\\"
+    case '\n' => "\\n"
+    case '\r' => "\\r"
+    case '\t' => "\\t"
+    case c if c < ' ' => f"\\u${c.toInt}%04x"
+    case c => c.toString
+  } + "\""
+
+  /** Prints `json` as one stdout line, then writes it newline-terminated
+    * to `path`. The printed line rides a log stream where a prefix can
+    * break a parser; the file is the parse-proof copy. A failed write is
+    * reported on stderr and does not abort the run. */
+  def writeArtifact(path: String, json: String): Unit = {
+    println(json)
+    try java.nio.file.Files.writeString(java.nio.file.Paths.get(path),
+      json + "\n")
+    catch { case scala.util.control.NonFatal(e) =>
+      System.err.println(s"could not write $path: $e")
+    }
   }
 }

@@ -343,8 +343,8 @@ case class Topology(topics: Seq[TopicSpec], operators: Seq[OperatorSpec],
                     shufflePartitions: Option[Int] = None) {
 
   /** Apply the topology-level `shuffle_partitions:` knob (measured
-    * r14, neardup_profile.json: a low-rate stateful stream pays
-    * (partitions x state-store commit) PER MICRO-BATCH — 8 instead of
+    * r14, history/neardup_profile.json: a low-rate stateful stream
+    * pays (partitions x state-store commit) PER MICRO-BATCH — 8 instead of
     * 32 partitions ran the near-dup topology 1.6x faster, and 2.9x
     * combined with a larger max_per_trigger). Session-scoped by
     * design and NOT restored: a stateful query pins its state

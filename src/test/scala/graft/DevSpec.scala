@@ -4,9 +4,11 @@ import java.io.ByteArrayOutputStream
 import java.nio.file.{Files, Path, Paths}
 import scala.jdk.CollectionConverters._
 
-/** The dev CLI (`graft.Dev`) and the one session seam it stands on: every
-  * subcommand runs on one sf0.001 query against the test session, and no
-  * main outside `graft/core/` builds its own SparkSession. */
+/** The dev CLI (`graft.Dev`) and the measurement surface it stands on:
+  * every query subcommand runs on one sf0.001 query against the test
+  * session, the scale sweep writes the artifact ScaleOutSpec reads, the
+  * artifact escaper round-trips, and no main outside `graft/core/`
+  * builds its own SparkSession. */
 class DevSpec extends SparkSpec {
 
   private val sfDir = "/root/testdata/sf0.001"
@@ -108,5 +110,30 @@ class DevSpec extends SparkSpec {
     assert(jobs.exists(_ >= 1), head)
     assert(out.count(_.trim.startsWith("job ")) == jobs.get, out.mkString("\n"))
     assert(out.exists(_.trim.startsWith("stage wall=")), out.mkString("\n"))
+  }
+
+  test("Measure.jsonString: quote, backslash and control characters " +
+    "round-trip through a JSON parser") {
+    val s = "a\"b\\c\nd\te\u0001f\r"
+    val node = new com.fasterxml.jackson.databind.ObjectMapper()
+      .readTree(core.Measure.jsonString(s))
+    assert(node.isTextual && node.asText() == s)
+    assert(core.Measure.jsonString("\n\t\u0001") == "\"\\n\\t\\u0001\"")
+  }
+
+  test("scale writes the artifact ScaleOutSpec parses, a throwing query " +
+    "as a FAILED row") {
+    val out = Files.createTempFile("graft_scale_out", ".json")
+    try {
+      Console.withOut(new ByteArrayOutputStream)(Dev.scale(spark, sfDir, 2,
+        out.toString, Seq("q_tpch_q1", "q_no_such_query"),
+        new core.Measure.WaitBudget(0L)))
+      val (bar, rows) = ScaleOutSpec.parse(Files.readString(out))
+      assert(bar == ScaleSweep.ratioBar(2))
+      assert(rows.map(_.name) == Seq("q_tpch_q1", "q_no_such_query"))
+      assert(ScaleOutSpec.failed(rows).map(_.name) == Seq("q_no_such_query"))
+      assert(rows.head.small > 0 && rows.head.big > 0 &&
+        rows.head.ratio > 0, rows.head)
+    } finally Files.delete(out)
   }
 }

@@ -1,47 +1,37 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
+import scala.jdk.CollectionConverters._
 
-/** Artifact gate for the measured scale tier (graft.ScaleSweep): the
+/** Artifact gate for the measured scale tier (`graft.Dev scale`): the
   * committed scale_out.json must show every swept query within the
   * shuffle-linear-with-headroom bar (time at 10x data <= ~15x time at
-  * 1x on constant cores). The MEASUREMENT lives in the ScaleSweep
-  * main (minutes — run per round, commit the artifact); this spec is
-  * the cheap always-on assertion that the committed claim holds and
-  * the sweep set hasn't silently shrunk. */
+  * 1x on constant cores). The MEASUREMENT is `Dev scale` (minutes — run
+  * per round, commit the artifact); this spec is the cheap always-on
+  * assertion that the committed claim holds and the sweep set hasn't
+  * silently shrunk. DevSpec reads a freshly written artifact with the
+  * same [[ScaleOutSpec.parse]]. */
 class ScaleOutSpec extends AnyFunSuite {
+  import ScaleOutSpec._
 
   private def checkArtifact(path: String): Unit = {
     val f = new java.io.File(path)
     if (!f.isFile)
-      cancel(s"$path absent — run `runMain graft.ScaleSweep`")
-    val text = java.nio.file.Files.readString(f.toPath)
-    val bar = """"ratio_bar":([0-9.]+)""".r.findFirstMatchIn(text)
-      .map(_.group(1).toDouble).getOrElse(ScaleSweep.RatioBar)
-    // -? so a FAILED row's -1.000 sentinels still PARSE and reach the
-    // dedicated failed-row assert below, instead of vanishing from the
-    // match set and firing the misleading "sweep set shrank" message
-    // (advice r13)
-    val row =
-      """"(q_[^"]+)":\{"sf01_sec":(-?[0-9.]+),"sf1_sec":(-?[0-9.]+),"ratio":(-?[0-9.]+)""".r
-    val rows = row.findAllMatchIn(text)
-      .map(m => (m.group(1), m.group(2).toDouble, m.group(3).toDouble,
-        m.group(4).toDouble)).toVector
+      cancel(s"$path absent — run `runMain graft.Dev scale`")
+    val (bar, rows) = parse(java.nio.file.Files.readString(f.toPath))
     assert(rows.size == ScaleSweep.SweepQueries.size,
-      s"sweep set shrank: ${rows.map(_._1)}")
-    val over = rows.filter(_._4 > bar)
+      s"sweep set shrank: ${rows.map(_.name)}")
+    val over = rows.filter(_.ratio > bar)
     assert(over.isEmpty, "SUPER-LINEAR rows (plan read required): " +
-      over.map(r => f"${r._1} ${r._4}%.1fx").mkString(", "))
-    // a FAILED row writes ratio -1 (ScaleSweep's error contract) —
-    // it must fail this gate, not slide under the bar
-    val failed = rows.filter(r => r._2 <= 0 || r._3 <= 0 || r._4 <= 0)
-    assert(failed.isEmpty,
+      over.map(r => f"${r.name} ${r.ratio}%.1fx").mkString(", "))
+    // a FAILED row writes -1 (Dev scale's error contract) — it must
+    // fail this gate, not slide under the bar
+    assert(failed(rows).isEmpty,
       s"FAILED sweep rows in the committed artifact: " +
-        failed.map(_._1).mkString(", "))
-    assert(!text.contains("\"verdict\":\"FAILED\""),
-      "artifact carries a FAILED verdict")
-    rows.foreach { case (n, s, b, r) =>
-      info(f"$n%-20s ${s}%6.2fs -> ${b}%6.2fs  ${r}%5.1fx (bar $bar)") }
+        failed(rows).map(_.name).mkString(", "))
+    rows.foreach { r =>
+      info(f"${r.name}%-20s ${r.small}%6.2fs -> ${r.big}%6.2fs  " +
+        f"${r.ratio}%5.1fx (bar $bar)") }
   }
 
   test("committed scale_out.json (10x): every query within the ratio bar") {
@@ -51,4 +41,29 @@ class ScaleOutSpec extends AnyFunSuite {
   test("committed scale_out_100.json (100x): every query within the bar") {
     checkArtifact("scale_out_100.json")
   }
+}
+
+object ScaleOutSpec {
+
+  final case class Row(name: String, small: Double, big: Double,
+                       ratio: Double, verdict: String)
+
+  /** A scale artifact's ratio bar and its per-query rows, by a real JSON
+    * parse. A missing number reads as -1, so it lands in [[failed]]. */
+  def parse(text: String): (Double, Vector[Row]) = {
+    val root = new com.fasterxml.jackson.databind.ObjectMapper()
+      .readTree(text)
+    val rows = root.path("queries").properties().iterator().asScala.map { e =>
+      val q = e.getValue
+      Row(e.getKey, q.path("sf01_sec").asDouble(-1), q.path("sf1_sec")
+        .asDouble(-1), q.path("ratio").asDouble(-1), q.path("verdict")
+        .asText(""))
+    }.toVector
+    (root.path("ratio_bar").asDouble(ScaleSweep.RatioBar), rows)
+  }
+
+  /** Rows that carry a failure: a non-positive time or ratio, or the
+    * FAILED verdict. */
+  def failed(rows: Seq[Row]): Seq[Row] = rows.filter(r =>
+    r.small <= 0 || r.big <= 0 || r.ratio <= 0 || r.verdict == "FAILED")
 }

@@ -22,7 +22,7 @@ OUT="${2:-report/selfcheck.json}"
 VDIR="$(mktemp -d /tmp/graft_selfcheck.XXXXXX)"
 # the verify dir holds 240 parquet trees (hundreds of MB at sf0.01);
 # repeated dev runs would leak /tmp dry, so clean up on exit unless the
-# caller wants the outputs (e.g. to refresh report/verify):
+# caller wants the outputs (e.g. to inspect the parquet dumps):
 #   SELFCHECK_KEEP=1 tools/selfcheck.sh
 if [ "${SELFCHECK_KEEP:-0}" != "1" ]; then
   trap 'rm -rf "$VDIR"' EXIT
