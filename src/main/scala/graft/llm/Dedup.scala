@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 import graft.functions.{MinHashSignature, Text, Vectors}
+import graft.operators.Ops
 
 /** Deduplication operators for large-scale training-data pipelines
   * (SURVEY.md §2.6). All variants are designed shuffle-linear: no all-pairs
@@ -273,13 +274,12 @@ object Dedup {
         textShingleHashes(col(textCol), shingleSize).as("hs"))
       .repartition(p, col("id"))
     // THREE consumers traverse sig (banding + both sides of the verify
-    // join) — persisted so the numHashes-way MinHash runs once, not
-    // once per consumer (the novelStage/Graph.scala persist rule;
-    // exchange reuse alone still re-ran the post-exchange minhash
-    // compute per consumer). Cached until the returned frame drops.
+    // join); all three read the one reused repartition exchange, so the
+    // scan and shingling run once and only the MinHash reruns per
+    // consumer (a fair A/B at sf0.1 measured it no slower than a cache;
+    // the Ops.withPersisted rule)
     val sig = hs.select(col("id"),
       minhashSigFromHashes(col("hs"), numHashes).as("sig"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     // One row per (doc, band) carrying ONLY (id, bkey) — the signature
     // array never rides the banding shuffle (at 100 TB the sig is the
     // payload; shuffling it per band would 32× the exchange).
@@ -378,13 +378,11 @@ object Dedup {
                          shingleSize: Int = 3, numHashes: Int = 128,
                          bands: Int = 32,
                          withSignatures: Boolean = false): DataFrame = {
-    // persist the signature stage iff the export carries signatures:
-    // the winner join traverses st.sig on a DIFFERENT key than the
-    // banding pipeline (ReuseExchange cannot dedupe it), so without the
-    // persist the corpus-wide tokenize→shingle→minhash — the most
-    // expensive compute of the family — would run twice
+    // with signatures, the winner join reads st.sig beside the banding
+    // pipeline: both read the one reused repartition exchange, so the
+    // tokenize→shingle pass runs once and only the MinHash runs twice
     val st = novelStage(df, idCol, textCol, shingleSize, numHashes,
-      bands, shortDocs = "novel", persistSig = withSignatures)
+      bands, shortDocs = "novel")
     val winners = st.firsts.select(col("bkey"), col("__w").as("winner"))
     if (!withSignatures) winners
     else winners.join(st.sig.select(col("id").as("winner"),
@@ -423,14 +421,18 @@ object Dedup {
     * (identical for EVERY short doc), banding unrelated short docs
     * together; the policy decides their fate instead
     * ([[ShortDocPolicies]]) — → signatures → (id, bkey) band rows →
-    * per-band minimum-id winners. */
-  private case class NovelStage(sig: DataFrame, banded: DataFrame,
-                                firsts: DataFrame, contentless: DataFrame)
+    * per-band minimum-id winners. The band rows derive from `sig`, so
+    * `copy(sig = held)` re-bands a held signature frame. */
+  private case class NovelStage(sig: DataFrame, contentless: DataFrame,
+                                numHashes: Int, bands: Int) {
+    val banded: DataFrame = sig.select(col("id"),
+      explode(bandKeysFromSig(col("sig"), numHashes, bands)).as("bkey"))
+    val firsts: DataFrame = banded.groupBy("bkey").agg(min("id").as("__w"))
+  }
 
   private def novelStage(df: DataFrame, idCol: String, textCol: String,
                          shingleSize: Int, numHashes: Int, bands: Int,
-                         shortDocs: String,
-                         persistSig: Boolean = false): NovelStage = {
+                         shortDocs: String): NovelStage = {
     require(numHashes % bands == 0, "bands must divide numHashes")
     requireShortDocPolicy(shortDocs)
     val p = df.sparkSession.sparkContext.defaultParallelism
@@ -442,27 +444,13 @@ object Dedup {
     val contentless = shortDocFate(
       df.filter(nTok < shingleSize)
         .select(col(idCol).cast("long").as("id")), idCol, shortDocs)
-    val sigRaw = df.filter(nTok >= shingleSize)
+    val sig = df.filter(nTok >= shingleSize)
       .select(col(idCol).cast("long").as("id"),
         textShingleHashes(col(textCol), shingleSize).as("hs"))
       .repartition(p, col("id"))
       .select(col("id"),
         minhashSigFromHashes(col("hs"), numHashes).as("sig"))
-    // the verified path traverses sig FOUR times (banding, both sides
-    // of the verify join, the final novelty ids) — without the persist
-    // each consumer re-scans the corpus and re-runs the shingle +
-    // numHashes-way MinHash, the single most expensive compute of the
-    // family (the Graph.scala round-6 rule: persist the shared frame
-    // before multiple consumers traverse it). Stays cached until the
-    // returned frame drops (ContextCleaner reclaims); ~(8B + 8B x
-    // numHashes)/doc, spills to disk at corpus scale.
-    val sig = if (persistSig)
-      sigRaw.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    else sigRaw
-    val banded = sig.select(col("id"),
-      explode(bandKeysFromSig(col("sig"), numHashes, bands)).as("bkey"))
-    val firsts = banded.groupBy("bkey").agg(min("id").as("__w"))
-    NovelStage(sig, banded, firsts, contentless)
+    NovelStage(sig, contentless, numHashes, bands)
   }
 
   /** The one `shortDocs` policy knob shared by [[minhashPairs]],
@@ -513,30 +501,42 @@ object Dedup {
     * NEVER bucket-quadratic (a boilerplate band of 10^6 docs adds 10^6
     * candidate rows, not 10^12); everything else is the minhashNovel
     * plan. The streaming twin's verify variant stores the winner
-    * signature in band state (128 longs) — see NearDupOp scaladoc. */
+    * signature in band state (128 longs) — see NearDupOp scaladoc.
+    *
+    * Eager: the novel ids are computed and `localCheckpoint`ed before
+    * the call returns, so the held signatures are released with it. */
   def minhashNovelVerified(df: DataFrame, idCol: String, textCol: String,
                            shingleSize: Int = 3, numHashes: Int = 128,
                            bands: Int = 32, threshold: Double = 0.5,
                            shortDocs: String = "novel"): DataFrame = {
-    val st = novelStage(df, idCol, textCol, shingleSize, numHashes,
-      bands, shortDocs, persistSig = true)
-    // suppression evidence, deduped BEFORE signatures ride any join
-    val cand = st.banded.join(st.firsts, "bkey")
-      .filter(col("__w") =!= col("id"))
-      .select(col("id"), col("__w").as("wid"))
-      .distinct()
-    val confirmed = cand
-      .join(st.sig.select(col("id"), col("sig")), "id")
-      .join(st.sig.select(col("id").as("wid"), col("sig").as("wsig")),
-        "wid")
-      .filter(graft.functions.SigAgreement(col("sig"), col("wsig"))
-        .cast("double") / numHashes >= threshold)
-      .select(col("id"))
-      .distinct()
-    st.sig.select(col("id"))
-      .join(confirmed, Seq("id"), "left_anti")
-      .select(col("id").as(idCol))
-      .unionByName(st.contentless)
+    val staged = novelStage(df, idCol, textCol, shingleSize, numHashes,
+      bands, shortDocs)
+    // sig is read FOUR times (banding, both sides of the verify join, the
+    // final novelty ids) and the MinHash after its exchange is the
+    // family's heaviest compute: held for the one eager run that
+    // detaches the result (a fair A/B at sf0.1 measured rerunning the
+    // MinHash per consumer slower; the Ops.withPersisted rule)
+    Ops.withPersisted(staged.sig) { held =>
+      val st = staged.copy(sig = held)
+      // suppression evidence, deduped BEFORE signatures ride any join
+      val cand = st.banded.join(st.firsts, "bkey")
+        .filter(col("__w") =!= col("id"))
+        .select(col("id"), col("__w").as("wid"))
+        .distinct()
+      val confirmed = cand
+        .join(st.sig.select(col("id"), col("sig")), "id")
+        .join(st.sig.select(col("id").as("wid"), col("sig").as("wsig")),
+          "wid")
+        .filter(graft.functions.SigAgreement(col("sig"), col("wsig"))
+          .cast("double") / numHashes >= threshold)
+        .select(col("id"))
+        .distinct()
+      st.sig.select(col("id"))
+        .join(confirmed, Seq("id"), "left_anti")
+        .select(col("id").as(idCol))
+        .unionByName(st.contentless)
+        .localCheckpoint()
+    }
   }
 
   /** NEAR-dup cross-corpus dedup — [[dedupAgainst]]'s MinHash sibling:
@@ -805,46 +805,49 @@ object Dedup {
         struct(col("src"), col("dst")),
         struct(col("dst").as("src"), col("src").as("dst")))).as("e"))
       .select(col("e.src").as("src"), col("e.dst").as("dst"))
-      .distinct().persist()
-    // the count both sizes the engine choice and materializes the cache
-    // every later step reads — never a wasted action
-    val nEdges = sym.count()
-    if (nEdges <= driverEdgeCap) {
-      val spark = pairs.sparkSession
-      import spark.implicits._
-      // <= keeps self-loop nodes registered (they label themselves)
-      val halfEdges = sym.filter(col("src") <= col("dst"))
-        .as[(Long, Long)].collect()
-      sym.unpersist()
-      return spark.createDataset(unionFind(halfEdges))
-        .toDF("id", "component")
+      .distinct()
+    // both paths return frames detached from the cache: the driver
+    // path's local rows, the loop's localCheckpointed labels
+    Ops.withPersisted(sym) { sym =>
+      // the count both sizes the engine choice and materializes the
+      // cache every later step reads — never a wasted action
+      if (sym.count() <= driverEdgeCap) {
+        val spark = pairs.sparkSession
+        import spark.implicits._
+        // <= keeps self-loop nodes registered (they label themselves)
+        val halfEdges = sym.filter(col("src") <= col("dst"))
+          .as[(Long, Long)].collect()
+        spark.createDataset(unionFind(halfEdges)).toDF("id", "component")
+      } else {
+        // each round reads `labels` twice: untruncated, the plan doubles
+        // every round (driver OOM by round 6 on a 120-node graph)
+        var labels = sym.select(col("src").as("id")).distinct()
+          .withColumn("label", col("id"))
+        var changed = 1L
+        var i = 0
+        while (changed > 0 && i < maxIters) {
+          val nbrMin = sym.join(labels, sym("dst") === labels("id"))
+            .groupBy(col("src")).agg(min(col("label")).as("nbr_label"))
+          val updated = labels.join(nbrMin,
+              labels("id") === nbrMin("src"), "left")
+            .select(col("id"), col("label"),
+              least(col("label"), coalesce(col("nbr_label"), col("label")))
+                .as("new_label"))
+            .localCheckpoint()
+          changed = updated.filter(col("new_label") =!= col("label"))
+            .count()
+          labels = updated.select(col("id"), col("new_label").as("label"))
+          i += 1
+        }
+        if (changed > 0)
+          org.slf4j.LoggerFactory.getLogger(getClass).warn(
+            s"components(): maxIters=$maxIters reached with $changed " +
+              "labels still changing — labels are NOT converged (graph " +
+              "diameter exceeds maxIters); raise maxIters for correct " +
+              "components")
+        labels.select(col("id"), col("label").as("component"))
+      }
     }
-    // each round reads `labels` twice: untruncated, the plan doubles
-    // every round (driver OOM by round 6 on a 120-node graph)
-    var labels = sym.select(col("src").as("id")).distinct()
-      .withColumn("label", col("id"))
-    var changed = 1L
-    var i = 0
-    while (changed > 0 && i < maxIters) {
-      val nbrMin = sym.join(labels, sym("dst") === labels("id"))
-        .groupBy(col("src")).agg(min(col("label")).as("nbr_label"))
-      val updated = labels.join(nbrMin, labels("id") === nbrMin("src"),
-          "left")
-        .select(col("id"), col("label"),
-          least(col("label"), coalesce(col("nbr_label"), col("label")))
-            .as("new_label"))
-        .localCheckpoint()
-      changed = updated.filter(col("new_label") =!= col("label")).count()
-      labels = updated.select(col("id"), col("new_label").as("label"))
-      i += 1
-    }
-    sym.unpersist()
-    if (changed > 0)
-      org.slf4j.LoggerFactory.getLogger(getClass).warn(
-        s"components(): maxIters=$maxIters reached with $changed labels " +
-          "still changing — labels are NOT converged (graph diameter " +
-          "exceeds maxIters); raise maxIters for correct components")
-    labels.select(col("id"), col("label").as("component"))
   }
 
   /** Driver union-find (path compression + union-to-min-root): the
@@ -1081,13 +1084,13 @@ object Dedup {
                      seeds: Seq[Int] = Seq(1, 2),
                      maxBucketSize: Int = 2000): DataFrame = {
     val p = df.sparkSession.sparkContext.defaultParallelism
-    // THREE consumers traverse vecs (banding + both verify joins) —
-    // persisted so the corpus scan + norm compute runs once (the
-    // multi-consumer persist rule)
+    // THREE consumers traverse vecs (banding + both verify joins); the
+    // norm runs before the repartition exchange, which the plan reuses,
+    // so the corpus scan + norm compute runs once without a cache (the
+    // Ops.withPersisted rule)
     val vecs = df.select(col(idCol).as("id"), col(vecCol).as("v"),
       Vectors.norm(col(vecCol)).as("nm"))
       .repartition(p, col("id"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     // ALL seed tables in one projection + one explode — one pass over the
     // vectors computes every signature (a per-seed union re-scanned and
     // re-signed the corpus |seeds| times). Banding rows carry only

@@ -155,18 +155,16 @@ object Drift {
   def driftByStratum(df: DataFrame, stratumCol: String, textCol: String,
                      ref: DataFrame, refTextCol: String): DataFrame = {
     val dec = "decimal(18,0)"
-    // both count frames feed a totals aggregate AND the vocab join —
-    // persisted so each corpus side tokenizes once (the multi-consumer
-    // persist rule); vocab-sized count rows, spill-safe
+    // both count frames feed a totals aggregate AND the vocab join; each
+    // ends in an aggregate exchange that the plan reuses, so each corpus
+    // side tokenizes once without a cache (the Ops.withPersisted rule)
     val sc = df.select(
         when(col(stratumCol).isNull,
           raise_error(lit("driftByStratum: NULL stratum")))
           .otherwise(col(stratumCol)).as("stratum"),
         explode(Text.tokens(col(textCol))).as("token"))
       .groupBy("stratum", "token").agg(count(lit(1)).as("cnt_a"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val rc = tokenCounts(ref, refTextCol).withColumnRenamed("cnt", "cnt_b")
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val refTot = rc.agg(coalesce(sum(col("cnt_b")),
       raise_error(lit("driftByStratum: empty reference"))).as("n_b"))
     val sTot = sc.groupBy("stratum").agg(sum(col("cnt_a")).as("n_a"))

@@ -64,23 +64,22 @@ object Dsir {
                        targetPred: Column, buckets: Int = 4096)
       : DataFrame =
     // DSIR is inherently two-pass (model build + scoring both traverse
-    // the staged counts) — persist here so the tokenize+hash+explode
-    // corpus pass runs once (the minhashPairs/BM25 persist rule); the
-    // staged frame is distinct (doc, bucket) count rows, far smaller
-    // than the text it came from, spill-safe at corpus scale
-    scoreStaged(stageCounts(df, idCol, textCol, targetPred, buckets)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK),
+    // the staged counts); the staged aggregate's exchange is reused, so
+    // the tokenize+hash+explode corpus pass runs once without a cache
+    // (the Ops.withPersisted rule)
+    scoreStaged(stageCounts(df, idCol, textCol, targetPred, buckets),
       idCol, buckets)
 
   /** Stage 1 of [[importanceScores]]: per-(doc, target-flag, bucket)
     * occurrence counts — the one corpus-sized aggregate (map-side
     * combined, keyed by (id, bucket)). Split out because DSIR is
     * inherently two-pass (build the model, then score): the composed
-    * plan references this stage twice, so a caller at corpus scale
-    * persists it (`val st = stageCounts(…); st.persist();
-    * scoreStaged(st, …)`) and pays tokenize+hash+explode once — the
-    * staged frame is distinct (doc, bucket) pairs, far smaller than
-    * the text it came from. */
+    * plan references this stage twice, and both references read one
+    * reused exchange, so tokenize+hash+explode runs once with no cache
+    * — the staged frame is distinct (doc, bucket) pairs, far smaller
+    * than the text it came from. A caller that scores one staged frame
+    * in several actions holds it with
+    * [[graft.operators.Ops.withPersisted]]. */
   def stageCounts(df: DataFrame, idCol: String, textCol: String,
                   targetPred: Column, buckets: Int = 4096): DataFrame = {
     require(buckets >= 2, s"buckets must be >= 2: $buckets")
@@ -131,14 +130,17 @@ object Dsir {
     // every per-bucket and total count rides the weight table: B rows
     // (counts + exact weight + the two log terms), broadcast once
     val weights = model.crossJoin(broadcast(totals))
-      .select(col("__b"),
+      .select(col("__b").as("__wb"),
         ((col("__cp") + 1) * (col("__tq") + buckets) -
           (col("__cq") + 1) * (col("__tp") + buckets)).as("__w"),
         (log(col("__cp").cast("double") + 1.0) -
           log(col("__tp").cast("double") + buckets) -
           log(col("__cq").cast("double") + 1.0) +
           log(col("__tq").cast("double") + buckets)).as("__lw"))
-    staged.join(broadcast(weights), "__b")
+    // null-safe on purpose: `__b` is never null, and a plain equi-join
+    // would infer a different not-null filter into each side's copy of
+    // `staged`, which stops the two from sharing one exchange
+    staged.join(broadcast(weights), col("__b") <=> col("__wb"))
       .groupBy(idCol)
       .agg(sum(col("__c")).as("n_feats"),
         sum(col("__c") * col("__w")).as("score"),

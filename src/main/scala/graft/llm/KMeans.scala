@@ -168,11 +168,10 @@ object KMeans {
                     model: Model, eps: Double,
                     maxCellSize: Int = 10000): DataFrame = {
     // THREE consumers traverse the assignment (bucketing + both sides
-    // of the vector join-back), and assign computes k distances per
-    // vector — persisted so that runs once (the multi-consumer persist
-    // rule); rows carry the vectors they'd otherwise re-read anyway
+    // of the vector join-back); assign is map-only, so each consumer
+    // rescans and recomputes its k distances per vector (measured no
+    // slower than a cache; the Ops.withPersisted rule)
     val a = assign(df, idCol, vecCol, model)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val buckets = a.groupBy("cell")
       .agg(graft.functions.BoundedCollect.pairs(maxCellSize)(
         col("id"), lit(0L)).as("ms"))

@@ -109,16 +109,17 @@ object Search {
         .cast("long").cast("decimal(38,0)"))
         .cast("long").as("__c"))
     // TWO consumers traverse tf (the corpus-global df table and the
-    // scoring join) — persisted so the corpus tokenize + explode +
-    // term-restricted groupBy runs once, not once per consumer (the
-    // minhashPairs/Graph persist rule). tf is the term-matching set
-    // (O(matching docs x query terms) rows of longs), spill-safe at
-    // any corpus size; cached until the returned frame drops.
+    // scoring join); its aggregate exchange is reused, so the corpus
+    // tokenize + explode + term-restricted groupBy runs once without a
+    // cache (the Ops.withPersisted rule). tf is the term-matching set
+    // (O(matching docs x query terms) rows of longs).
     val tf = restrict(toks)
       .groupBy(col(idCol), col("__dl"), col("__h"))
       .agg(count(lit(1)).as("__tf"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val dfq = tf.groupBy("__h").agg(count(lit(1)).as("__df"))
+    // count_if(__tf > 0) equals count(1) (__tf >= 1) but reads __tf, so
+    // column pruning leaves this branch's tf aggregate — and exchange —
+    // identical to the scoring join's
+    val dfq = tf.groupBy("__h").agg(count_if(col("__tf") > 0).as("__df"))
     fanOut(tf.join(broadcast(dfq), "__h"))
       .crossJoin(broadcast(tots))
       .groupBy(keys: _*).agg(

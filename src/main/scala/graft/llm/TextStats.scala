@@ -171,14 +171,16 @@ object TextStats {
                topN: Int = 3): DataFrame = {
     require(topN >= 1, s"topN must be >= 1: $topN")
     // tf feeds BOTH the document-frequency aggregate and the scoring
-    // join — persisted so the corpus tokenize+explode runs once (the
-    // minhashPairs/BM25 persist rule); (doc, term, count) rows, far
-    // smaller than the text, spill-safe
+    // join; its aggregate exchange is reused, so the corpus
+    // tokenize+explode runs once without a cache (the Ops.withPersisted
+    // rule)
     val tf = df
       .select(col(idCol), explode(Text.tokens(col(textCol))).as("term"))
       .groupBy(idCol, "term").agg(count(lit(1)).as("tf"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val dfreq = tf.groupBy("term").agg(count(lit(1)).as("df"))
+    // count_if(tf > 0) equals count(1) (tf >= 1) but reads tf, so column
+    // pruning leaves this branch's tf aggregate — and exchange —
+    // identical to the scoring join's
+    val dfreq = tf.groupBy("term").agg(count_if(col("tf") > 0).as("df"))
     val nDocs = df.select(countDistinct(col(idCol)).as("n_docs"))
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy(col(idCol)).orderBy(col("score").desc, col("term"))
@@ -463,18 +465,17 @@ object TextStats {
     // (round 11): the raw exploded docToks was traversed THREE times
     // (class counts, totals, scoring) and refToks twice, each a full
     // corpus scan + tokenize. Now each side is tokenized ONCE:
-    // `dtc` (doc x distinct-token counts — the scoring granularity) is
-    // persisted for its three consumers; `cPos` (ref vocabulary counts)
-    // for its two. The weighted fold below is arithmetically identical
-    // to the per-instance original (exact integer counts throughout).
+    // `dtc` (doc x distinct-token counts — the scoring granularity, three
+    // consumers) and `cPos` (ref vocabulary counts, two) each end in an
+    // aggregate exchange the plan reuses (the Ops.withPersisted rule).
+    // The weighted fold below is arithmetically identical to the
+    // per-instance original (exact integer counts throughout).
     val dtc = docs
       .select(col(idCol), explode(Text.tokens(col(textCol))).as("__w"))
       .groupBy(col(idCol), col("__w")).agg(count(lit(1)).as("__c"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val cPos = ref
       .select(explode(Text.tokens(col(refTextCol))).as("__w"))
       .groupBy("__w").agg(count(lit(1)).as("__cp"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val cNeg = dtc.groupBy("__w").agg(sum("__c").as("__cn"))
     val vocab = cPos.join(cNeg, Seq("__w"), "full_outer")
       .select(col("__w"),

@@ -406,11 +406,27 @@ object Ops {
   }
 
   /** Scoped persist for multi-read stage boundaries: persist `df`, run
-    * `body` against the cached frame, ALWAYS unpersist on the way out —
-    * so a long-lived session (topology runner, notebook) reusing a
-    * pipeline operator does not accumulate cached frames with each
-    * invocation (the q_pipeline_ingest survivor cache used to leak by
-    * design; round-8 verdict task #8).
+    * `body` against the cached frame, ALWAYS unpersist on the way out.
+    *
+    * The engine's one cache-lifetime rule: a library function never
+    * leaves a cache behind. Spark's CacheManager holds every persisted
+    * plan until `unpersist`/`clearCache` — it is never garbage-collected
+    * — so a bare `persist` in a function that returns a lazy frame
+    * leaks one cache per call, and the next call with the same plan
+    * silently reads the first call's rows. Hence, for a frame that
+    * several consumers read:
+    *  - if it ends in an aggregate or `repartition` exchange and every
+    *    consumer sits in the one returned plan, cache nothing: Spark's
+    *    exchange reuse (`ReusedExchange`) computes it once — provided
+    *    every consumer plans the same exchange (a pruned column or a
+    *    differently inferred filter in one branch breaks the match;
+    *    `graft.Dev explain-final` shows whether it holds);
+    *  - if the consumers span several actions (driver collects, a
+    *    loop), or rerunning the work after the exchange measures slower
+    *    than a cache, hold it here.
+    * This is the only place in `src/main` that persists, besides the
+    * batch topology runner's memory relay, whose cached view is the
+    * run's output by design (`Topology.runBatch`); DevSpec pins both.
     *
     * Contract: whatever `body` returns must be DETACHED from the cached
     * frame before returning — run the terminal action inside `body`, or
@@ -427,9 +443,9 @@ object Ops {
 
   /** rxsci `tee_map`: run several branch pipelines over the same stream and
     * merge their (schema-aligned) outputs — multiplex/demultiplex. The
-    * shared scan is planned once per branch by Catalyst; wrap the input in
-    * `.persist()` upstream if branches are expensive and the source isn't
-    * a cheap columnar scan. */
+    * shared scan is planned once per branch by Catalyst; if branches are
+    * expensive and the source isn't a cheap columnar scan, run the tee
+    * inside [[withPersisted]] and detach its result there. */
   def teeMap(branches: Op*): Op = {
     // construction-time, not apply-time: a config-driven branch list
     // filtered to empty should fail where it was built

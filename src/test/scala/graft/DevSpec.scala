@@ -7,8 +7,9 @@ import scala.jdk.CollectionConverters._
 /** The dev CLI (`graft.Dev`) and the measurement surface it stands on:
   * every query subcommand runs on one sf0.001 query against the test
   * session, the scale sweep writes the artifact ScaleOutSpec reads, the
-  * artifact escaper round-trips, and no main outside `graft/core/`
-  * builds its own SparkSession. */
+  * artifact escaper round-trips, no main outside `graft/core/`
+  * builds its own SparkSession, and no library code persists outside
+  * `Ops.withPersisted`. */
 class DevSpec extends SparkSpec {
 
   private val sfDir = "/root/testdata/sf0.001"
@@ -20,24 +21,54 @@ class DevSpec extends SparkSpec {
     buf.toString("UTF-8").linesIterator.toSeq
   }
 
-  test("no SparkSession.builder() call in src/main/scala outside " +
-    "graft/core/ (comment lines excluded)") {
+  /** Every non-comment line of `src/main/scala`, as (path relative to
+    * it, 1-based line number, trimmed text). */
+  private lazy val mainCode: Seq[(String, Int, String)] = {
     val root = Paths.get("src/main/scala")
     assert(Files.isDirectory(root), root.toAbsolutePath)
-    val core = root.resolve("graft/core")
     val walk = Files.walk(root)
-    val offenders = try walk.iterator.asScala
-      .filter(p => p.toString.endsWith(".scala") && !p.startsWith(core))
-      .filter { p: Path =>
-        Files.readAllLines(p).asScala.exists { l =>
-          val t = l.trim
-          !t.startsWith("//") && !t.startsWith("*") && !t.startsWith("/*") &&
-            t.contains("SparkSession.builder()")
+    try walk.iterator.asScala
+      .filter(_.toString.endsWith(".scala")).toVector
+      .flatMap { p: Path =>
+        Files.readAllLines(p).asScala.zipWithIndex.map { case (l, i) =>
+          (root.relativize(p).toString, i + 1, l.trim)
         }
-      }.map(root.relativize(_).toString).toVector.sorted
+      }
+      .filterNot { case (_, _, t) =>
+        t.startsWith("//") || t.startsWith("*") || t.startsWith("/*")
+      }
     finally walk.close()
+  }
+
+  test("no SparkSession.builder() call in src/main/scala outside " +
+    "graft/core/ (comment lines excluded)") {
+    val offenders = mainCode.collect {
+      case (f, _, l) if !f.startsWith("graft/core/") &&
+        l.contains("SparkSession.builder()") => f
+    }.distinct.sorted
     assert(offenders.isEmpty,
       s"build sessions through core.Measure or core.GraftSession: $offenders")
+  }
+
+  test("src/main/scala persists only in Ops.withPersisted and the " +
+    "topology memory relay (comment lines excluded)") {
+    // each allowed file with its number of persisting lines and why
+    val allowed: Map[String, (Int, String)] = Map(
+      "graft/operators/Ops.scala" -> (1, "withPersisted: the one " +
+        "scoped cache, released when its body returns"),
+      "graft/streaming/Topology.scala" -> (1, "runBatch memory relay: " +
+        "a view with two or more consumers is cached so they read one " +
+        "materialization; the view is the run's output by design"))
+    val hits = mainCode.filter { case (_, _, l) =>
+      l.contains(".persist(") || l.contains(".cache()")
+    }
+    val offenders = hits.groupBy(_._1).toSeq.sortBy(_._1).collect {
+      case (f, hs) if hs.size > allowed.get(f).fold(0)(_._1) =>
+        hs.map { case (_, n, l) => s"$f:$n: $l" }.mkString("\n")
+    }
+    assert(offenders.isEmpty,
+      "hold a cache through Ops.withPersisted, or rely on exchange " +
+        s"reuse:\n${offenders.mkString("\n")}")
   }
 
   test("SparkEntry.queries is built once") {

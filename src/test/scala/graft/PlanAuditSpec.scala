@@ -19,13 +19,24 @@ class PlanAuditSpec extends SparkSpec {
 
   private def planStr(q: String): String = plan(q).toString
 
-  /** Every battery query built once, shared by the two battery-wide
+  /** One battery query as built: its QueryExecution (or the failure to
+    * build it), and whether building it left a Dataset cache in the
+    * session. */
+  private case class Built(qe: Try[QueryExecution], leftCache: Boolean)
+
+  /** Every battery query built once, shared by the three battery-wide
     * audits (the first takes its executedPlan, the second its
-    * optimizedPlan, which the first already computed). A query that
-    * fails to build holds its failure here and fails both audits. */
-  private lazy val battery: Map[String, Try[QueryExecution]] =
+    * optimizedPlan, which the first already computed, the third its
+    * cache flag). A query that fails to build holds its failure here and
+    * fails the plan audits. Each build starts from an empty cache:
+    * `Dataset.persist` registers its plan with the CacheManager when it
+    * is called, so a cache left after the build is one the query never
+    * releases. */
+  private lazy val battery: Map[String, Built] =
     SparkEntry.queries.map { case (q, fn) =>
-      q -> Try(fn(spark, sfDir).queryExecution)
+      spark.catalog.clearCache()
+      val qe = Try(fn(spark, sfDir).queryExecution)
+      q -> Built(qe, !spark.sharedState.cacheManager.isEmpty)
     }
 
   test("q_filter pushes its predicate into the parquet scan") {
@@ -67,12 +78,22 @@ class PlanAuditSpec extends SparkSpec {
     SparkEntry.queries.keys.filterNot(allowed).foreach { q =>
       // a query that fails to PLAN is an audit failure, not a skip —
       // swallowing it here would green-light a broken query
-      val p = try battery(q).get.executedPlan.toString catch {
+      val p = try battery(q).qe.get.executedPlan.toString catch {
         case e: Throwable => fail(s"$q failed to plan: ${e.getMessage}")
       }
       assert(!p.contains("CartesianProduct"),
         s"$q plans a CartesianProduct")
     }
+  }
+
+  test("no battery query leaves a Dataset cache behind (a cache is held " +
+    "only inside Ops.withPersisted)") {
+    assert(battery.size == SparkEntry.queries.size)
+    val leakers = battery.collect { case (q, b) if b.leftCache => q }
+      .toSeq.sorted
+    assert(leakers.isEmpty,
+      s"${leakers.size} queries leave a cache after building: " +
+        leakers.mkString(", "))
   }
 
   test("TPC-H shapes: dims broadcast, facts shuffle on the join key, " +
@@ -486,33 +507,22 @@ class PlanAuditSpec extends SparkSpec {
     "it twice more at the scan)") {
     // no kernel may appear inside ANY Filter condition (the rule's
     // whole point); single-consumer plans get exactly one logical
-    // instantiation. Multi-consumer plans dedupe their copies either
-    // physically (ReusedExchange) or — since round 11 — via an
-    // explicit persist (minhash_pairs' sig frame): an InMemoryRelation
-    // COMPUTES its cached plan once however many references print it,
-    // so each distinct cached plan counts ONCE here, not per mention.
+    // instantiation. Multi-consumer plans (minhash_pairs' three sig
+    // consumers) print one copy per consumer and dedupe them physically
+    // (ReusedExchange).
     def kernelCount(s: String): Int =
       "graft_text_shingle_hashes\\(\\w".r.findAllIn(s).length +
         "graft_hashed_tokens\\(\\w".r.findAllIn(s).length
     def audit(q: String, maxLogical: Int): Unit = {
-      val qe = SparkEntry.queries(q)(spark, sfDir).queryExecution
-      val lp = qe.optimizedPlan
-      val opt = lp.toString
+      val opt = SparkEntry.queries(q)(spark, sfDir).queryExecution
+        .optimizedPlan.toString
       val badFilter = opt.linesIterator.exists(l =>
         l.trim.stripPrefix(":").stripPrefix("- ").trim
           .startsWith("Filter") &&
           (l.contains("graft_text_shingle_hashes") ||
             l.contains("graft_hashed_tokens")))
       assert(!badFilter, s"$q: kernel inside a Filter condition\n$opt")
-      val imrs = lp.collect {
-        case r: org.apache.spark.sql.execution.columnar.InMemoryRelation
-          => r
-      }
-      val perMention = imrs
-        .map(r => kernelCount(r.cacheBuilder.cachedPlan.toString)).sum
-      val perDistinct = imrs.map(_.cacheBuilder.cachedPlan.toString)
-        .distinct.map(kernelCount).sum
-      val kernels = kernelCount(opt) - perMention + perDistinct
+      val kernels = kernelCount(opt)
       assert(kernels <= maxLogical,
         s"$q: $kernels kernel instantiations\n$opt")
     }
@@ -604,7 +614,7 @@ class PlanAuditSpec extends SparkSpec {
     val offenders = scala.collection.mutable.ArrayBuffer.empty[String]
     val usedAllowlist = scala.collection.mutable.Set.empty[String]
     SparkEntry.queries.keys.toSeq.sorted.foreach { q =>
-      val p = try battery(q).get.optimizedPlan
+      val p = try battery(q).qe.get.optimizedPlan
       catch {
         case e: Throwable => fail(s"$q failed to plan: ${e.getMessage}")
       }
