@@ -18,7 +18,8 @@ object Bench {
     * Round-11 lesson: the committed artifact was taken on a box whose
     * load ramped 4->8 during the run, soft-flooring every number. LOAD
     * GATE ([[awaitQuietBox]]): before each timed sweep, wait (bounded)
-    * for the 1-min load average to drop below 2.0, polling every 15s,
+    * for the CPU load of other processes to drop below 2 cores,
+    * checking every 15s,
     * with one TOTAL wait `budget` per run so a permanently-busy box still
     * produces an artifact. Callers gate before the first sweep and stamp
     * [[waitedMs]]. */

@@ -225,9 +225,9 @@ object Dev {
       queries.map(n => n -> (if (timer.failures.contains(n)) -1.0
         else samples(n).min)).toMap
     }
-    // the quiet-box gate before each tier: corpus generation ramps the
-    // 1-min load average, and an inflated small tier COMPRESSES every
-    // ratio (the first committed run measured q_hits at 0.86x)
+    // the quiet-box gate before each tier: a small tier inflated by
+    // other tenants COMPRESSES every ratio (the first committed run
+    // measured q_hits at 0.86x)
     core.Measure.awaitQuietBox(budget)
     val loadBefore = core.Measure.loadAvg
     val small = tier(baseDir)

@@ -156,9 +156,10 @@ CREATE OR REPLACE MACRO g_xxh_str(s) AS g_sgn(g_xxh_bytes(g_bytes(s), 42::HUGEIN
     * seed-chained `pmod(xxhash64(lit(seed), token), buckets)`: the int
     * literal hashes first (g_xxh_int at Spark's default seed 42), the
     * token's bytes hash with THAT as seed, then signed pmod. The TVD
-    * grid mirrors DriftOp.finishBy: every (window, reference-bucket)
-    * cell participates (buckets absent from a window still carry drift
-    * mass), integer cross-multiplied numerators, one double cast. */
+    * grid is the key union DriftOp.finishBy folds: every (window,
+    * reference-bucket) cell participates (buckets absent from a window
+    * still carry drift mass), integer cross-multiplied numerators, one
+    * double cast. */
   def q_drift_dag(buckets: Int, seed: Int, epoch0: Long): String = {
     val bkt = s"((g_sgn(g_xxh_bytes(g_bytes(t), " +
       s"g_xxh_int($seed, 42::HUGEINT))) % $buckets) + $buckets) " +

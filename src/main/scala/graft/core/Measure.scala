@@ -43,16 +43,37 @@ object Measure {
   def loadAvg: Double = java.lang.management.ManagementFactory
     .getOperatingSystemMXBean.getSystemLoadAverage
 
-  /** Quiet-box gate: wait (bounded) for the 1-min load average to drop
-    * below `gate`, polling every 15s. Returns ms actually waited;
-    * callers stamp it so a never-quiet run is self-documenting. The
-    * budget is a mutable cell shared across a run's gate points so the
-    * TOTAL wait stays bounded (the graft.Bench round-12 protocol). */
+  /** CPU in use by everything but this JVM, in cores: the system's
+    * recent CPU load minus this process's
+    * (`com.sun.management.OperatingSystemMXBean`), averaged over
+    * `samples` one-second readings. The 1-min load average would also
+    * count this run's own sweep for a minute after it ends. Falls back
+    * to [[loadAvg]] where the JVM reports no CPU load. */
+  def otherCpuLoad(samples: Int = 3): Double =
+    java.lang.management.ManagementFactory.getOperatingSystemMXBean match {
+      case os: com.sun.management.OperatingSystemMXBean =>
+        os.getCpuLoad; os.getProcessCpuLoad // each reads since its last call
+        val reads = (1 to samples).map { _ =>
+          Thread.sleep(1000L)
+          (os.getCpuLoad, os.getProcessCpuLoad)
+        }
+        if (reads.exists { case (sys, proc) => sys < 0 || proc < 0 }) loadAvg
+        else reads.map { case (sys, proc) => math.max(0.0, sys - proc) }
+          .sum / samples * Runtime.getRuntime.availableProcessors
+      case _ => loadAvg
+    }
+
+  /** Quiet-box gate: wait (bounded) for the CPU load of OTHER processes
+    * ([[otherCpuLoad]]) to drop below `gate` cores, sleeping 15s
+    * between checks. Returns ms slept; callers stamp it so a
+    * never-quiet run is self-documenting. The budget is a mutable cell
+    * shared across a run's gate points so the TOTAL wait stays bounded
+    * (the graft.Bench round-12 protocol). */
   final class WaitBudget(var remainingMs: Long)
 
   def awaitQuietBox(budget: WaitBudget, gate: Double = 2.0): Long = {
     var waited = 0L
-    while (loadAvg > gate && budget.remainingMs > 0) {
+    while (budget.remainingMs > 0 && otherCpuLoad() > gate) {
       val step = math.min(15000L, budget.remainingMs)
       Thread.sleep(step)
       budget.remainingMs -= step

@@ -24,6 +24,12 @@ object BoundedCollect {
     * every caller (pair generation is order-free). */
   private type Buf = (List[(Long, Long)], Int, Boolean)
 
+  // built once per JVM (Scala runtime reflection; Spark asks for the
+  // encoders again in every deserialized task)
+  private val bufferEnc = Encoders.product[Buf]
+  private val outputEnc = org.apache.spark.sql.catalyst.encoders
+    .ExpressionEncoder[Seq[(Long, Long)]]()
+
   private class PairsAgg(cap: Int)
       extends Aggregator[(Long, Long), Buf, Seq[(Long, Long)]] {
     def zero: Buf = (Nil, 0, false)
@@ -37,10 +43,8 @@ object BoundedCollect {
     // overflow finishes EMPTY — indistinguishable from a bucket too small
     // to pair, which is exactly the caller's drop condition (size > 1)
     def finish(b: Buf): Seq[(Long, Long)] = if (b._3) Nil else b._1
-    def bufferEncoder = Encoders.product[Buf]
-    def outputEncoder =
-      org.apache.spark.sql.catalyst.encoders
-        .ExpressionEncoder[Seq[(Long, Long)]]()
+    def bufferEncoder = bufferEnc
+    def outputEncoder = outputEnc
   }
 
   /** Column aggregate: apply to `(idCol, payloadCol)` in a groupBy;

@@ -23,6 +23,13 @@ import org.apache.spark.sql.functions.udaf
   * distinct table for display). */
 object FreqItems {
 
+  // built once per JVM (Scala runtime reflection; Spark asks for the
+  // encoders again in every deserialized task)
+  private val bufferEnc = org.apache.spark.sql.catalyst.encoders
+    .ExpressionEncoder[Map[Long, Long]]()
+  private val outputEnc = org.apache.spark.sql.catalyst.encoders
+    .ExpressionEncoder[Seq[(Long, Long)]]()
+
   private class MisraGries(m: Int)
       extends Aggregator[Long, Map[Long, Long], Seq[(Long, Long)]] {
     def zero: Map[Long, Long] = Map.empty
@@ -54,12 +61,8 @@ object FreqItems {
     def finish(b: Map[Long, Long]): Seq[(Long, Long)] =
       b.toSeq.sortBy { case (k, c) => (-c, k) }
 
-    def bufferEncoder =
-      org.apache.spark.sql.catalyst.encoders
-        .ExpressionEncoder[Map[Long, Long]]()
-    def outputEncoder =
-      org.apache.spark.sql.catalyst.encoders
-        .ExpressionEncoder[Seq[(Long, Long)]]()
+    def bufferEncoder = bufferEnc
+    def outputEncoder = outputEnc
   }
 
   /** Column aggregate over a LONG item column: yields

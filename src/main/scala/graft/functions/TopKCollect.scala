@@ -23,7 +23,7 @@ import org.apache.spark.sql.functions.udaf
   */
 object TopKCollect {
 
-  private type Item = (Long, Double) // (id, score)
+  private[graft] type Item = (Long, Double) // (id, score)
 
   /** Ranking order: score descending, ties to the smaller id — matches
     * `orderBy(col("cosine").desc, col("nbr_id"))`. Total order even for
@@ -58,19 +58,23 @@ object TopKCollect {
         else hy :: mergeSorted(x, y.tail, k - 1)
     }
 
-  private class TopKAgg(k: Int)
+  // built once per JVM: an ExpressionEncoder is derived by Scala
+  // runtime reflection, and Spark asks the aggregator for its encoders
+  // again in every deserialized task
+  private val bufferEnc = org.apache.spark.sql.catalyst.encoders
+    .ExpressionEncoder[List[Item]]()
+  private val outputEnc = org.apache.spark.sql.catalyst.encoders
+    .ExpressionEncoder[Seq[Item]]()
+
+  private[graft] class TopKAgg(k: Int)
       extends Aggregator[Item, List[Item], Seq[Item]] {
     def zero: List[Item] = Nil
     def reduce(b: List[Item], a: Item): List[Item] = insert(b, a, k)
     def merge(x: List[Item], y: List[Item]): List[Item] =
       mergeSorted(x, y, k)
     def finish(b: List[Item]): Seq[Item] = b
-    def bufferEncoder =
-      org.apache.spark.sql.catalyst.encoders
-        .ExpressionEncoder[List[Item]]()
-    def outputEncoder =
-      org.apache.spark.sql.catalyst.encoders
-        .ExpressionEncoder[Seq[Item]]()
+    def bufferEncoder = bufferEnc
+    def outputEncoder = outputEnc
   }
 
   /** Column aggregate: apply to `(idCol, scoreCol)` in a groupBy; yields

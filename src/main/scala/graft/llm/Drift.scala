@@ -196,64 +196,85 @@ object Drift {
     * cnt)` (the [[graft.streaming.ops.DriftOp]] cell product, or
     * [[binCounts]] grouped by a window column), the exact TVD between
     * each window and the PREVIOUS present window. A spike in the series
-    * marks the hour the corpus changed. Adjacency is by rank over the
+    * marks the hour the corpus changed. Adjacency is by order over the
     * PRESENT windows (an empty hour doesn't break the chain — the next
     * present window compares against the last one that had data).
     *
-    * The window list is tiny (windows, not rows) and broadcasts; each
-    * side of the per-pair full-outer is a bounded bucket table, so the
-    * whole series costs two window-keyed joins + one aggregate. Output:
+    * One aggregate folds each window's cells into a histogram row
+    * ([[histograms]]: bucket → cnt map, total, NULL-bucket mass); a
+    * `lag` over those rows — one per window, so the unpartitioned
+    * window sorts windows, not cells — pairs each with its
+    * predecessor, and [[histNum]] folds the pair's numerator in one
+    * pass over the two maps. No join: the cells are traversed once.
+    * `cells` must be a count table (one row per (window_start,
+    * bucket)); a repeated bucket is refused by the map build. Output:
     * (window_start, prev_start, n_a = window tokens, n_b = previous
     * window's, tvd_num, tvd) — the [[driftFromCounts]] arithmetic per
-    * pair (DriftSpec pin). */
+    * pair (DriftSpec pin), a NULL bucket unmatched on both sides as in
+    * its join. */
   def adjacentDrift(cells: DataFrame): DataFrame = {
-    val dec = "decimal(18,0)"
-    // three consumers traverse the cell table, but NO persist here —
-    // measured at sf0.1 (q_adjacent_drift 1.0 -> 1.7s): the upstream
-    // cells plan is one cheap windowed aggregate whose exchange the
-    // consumers already reuse, so the cache write costs more than the
-    // re-aggregation; a caller whose cells ARE expensive persists them
-    // before calling (the DriftOp.finish streaming product arrives
-    // materialized from parquet anyway)
-    // a NULL window would rank first and silently pair with the real
+    // a NULL window would sort first and silently pair with the real
     // first window — refuse it (the Ops NULL-key contract)
-    val wTot = cells
+    val perWindow = histograms(cells
       .withColumn("window_start", when(col("window_start").isNull,
         raise_error(lit("adjacentDrift: NULL window_start")))
-        .otherwise(col("window_start")))
-      .groupBy("window_start")
-      .agg(sum(col("cnt")).as("__tot"))
-    val ranked = wTot.select(col("window_start"), col("__tot"),
-      row_number().over(Window.orderBy(col("window_start"))).as("__r"))
-    // (current, previous) pairs of PRESENT windows, with both totals
-    val pairs = ranked.alias("c")
-      .join(ranked.alias("p"), col("c.__r") === col("p.__r") + 1)
-      .select(col("c.window_start").as("window_start"),
-        col("p.window_start").as("prev_start"),
-        col("c.__tot").as("n_a"), col("p.__tot").as("n_b"))
-    val a = cells.join(broadcast(pairs), Seq("window_start"))
-      .select(col("window_start"), col("prev_start"), col("bucket"),
-        col("cnt").as("cnt_a"))
-    val b = cells.select(col("window_start").as("prev_start"),
-        col("bucket"), col("cnt").as("cnt_b"))
-      .join(broadcast(pairs.select("window_start", "prev_start")),
-        Seq("prev_start"))
-    a.join(b, Seq("window_start", "prev_start", "bucket"), "full_outer")
-      .na.fill(0L, Seq("cnt_a", "cnt_b"))
-      .join(broadcast(pairs), Seq("window_start", "prev_start"))
-      .withColumn("__num", abs(
-        col("cnt_a").cast(dec) * col("n_b").cast(dec) -
-          col("cnt_b").cast(dec) * col("n_a").cast(dec))
-        .cast("decimal(38,0)"))
-      .groupBy("window_start", "prev_start")
-      .agg(first(col("n_a")).as("n_a"), first(col("n_b")).as("n_b"),
-        sum(col("__num")).as("__tvd_num"))
+        .otherwise(col("window_start"))), Seq(col("window_start")))
+    val w = Window.orderBy(col("window_start"))
+    perWindow
+      .select(col("window_start"),
+        lag(col("window_start"), 1).over(w).as("prev_start"),
+        col("__n").as("n_a"), lag(col("__n"), 1).over(w).as("n_b"),
+        col("__h").as("__ha"), lag(col("__h"), 1).over(w).as("__hb"),
+        col("__null").as("__null_a"),
+        lag(col("__null"), 1).over(w).as("__null_b"))
+      .filter(col("prev_start").isNotNull)
+      .withColumn("__tvd_num", histNum(col("__ha"), col("__null_a"),
+        col("n_a"), col("__hb"), col("__null_b"), col("n_b")))
       .select(col("window_start"), col("prev_start"), col("n_a"),
         col("n_b"),
         col("__tvd_num").cast("double").as("tvd_num"),
         (col("__tvd_num").cast("double") /
           (lit(2.0) * col("n_a").cast("double") *
             col("n_b").cast("double"))).as("tvd"))
+  }
+
+  /** One histogram row per `keys` group of a count table (`bucket`,
+    * `cnt`): `__h` = map bucket → cnt over the non-NULL buckets, `__null`
+    * = the NULL-bucket mass (0 when none; a map key cannot be NULL, and
+    * a NULL key matches nothing in a join, so it is carried apart) and
+    * `__n` = Σ cnt. No `keys` gives the one-row histogram of the table;
+    * an empty table then has `__n` NULL. */
+  private[graft] def histograms(cells: DataFrame, keys: Seq[Column])
+      : DataFrame = {
+    cells.groupBy(keys: _*).agg(
+      map_from_entries(collect_list(when(col("bucket").isNotNull,
+        struct(col("bucket"), col("cnt"))))).as("__h"),
+      coalesce(sum(when(col("bucket").isNull, col("cnt"))), lit(0L))
+        .as("__null"),
+      sum(col("cnt")).as("__n"))
+  }
+
+  /** The exact TVD numerator of two [[histograms]] rows,
+    * Σ_k |a[k]·n_b − b[k]·n_a| over the union of the two maps' keys (a
+    * key missing from one side reads 0 there) plus each side's
+    * NULL-bucket mass, which no key matches (`nullA`·n_b + `nullB`·n_a)
+    * — the full-outer count join of [[driftFromCounts]] for one pair of
+    * bounded histograms, in exact decimal(38,0) over the same
+    * decimal(18,0) operands. `map_zip_with` pairs the maps by key in one
+    * hashed pass, so the fold is linear in the buckets (a per-key
+    * `element_at` would scan the map for every key). */
+  private[graft] def histNum(a: Column, nullA: Column, nA: Column,
+                             b: Column, nullB: Column, nB: Column)
+      : Column = {
+    val dec = "decimal(18,0)"
+    val dec38 = "decimal(38,0)"
+    val matched = aggregate(
+      map_values(map_zip_with(a, b, (_, ca, cb) =>
+        abs(coalesce(ca, lit(0L)).cast(dec) * nB.cast(dec) -
+          coalesce(cb, lit(0L)).cast(dec) * nA.cast(dec)).cast(dec38))),
+      lit(0).cast(dec38), (acc, x) => (acc + x).cast(dec38))
+    (matched + nullA.cast(dec) * nB.cast(dec) +
+      nullB.cast(dec) * nA.cast(dec)).cast(dec38)
   }
 
   /** Full-outer count join with broadcast totals: one row per key seen on

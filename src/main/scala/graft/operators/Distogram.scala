@@ -81,6 +81,10 @@ object Distogram {
     else (bins.take(idx) :+ ((v, c))) ++ bins.drop(idx)
   }
 
+  // built once per JVM (Scala runtime reflection; Spark asks for the
+  // encoders again in every deserialized task)
+  private val sketchEnc: Encoder[Sketch] = Encoders.product[Sketch]
+
   /** Typed aggregator: use as
     * `df.groupBy(...).agg(Distogram.sketch(32).toColumn)` on Dataset, or
     * via `udaf`/`functions.udaf` registration for DataFrames. */
@@ -95,8 +99,8 @@ object Distogram {
             insertSorted(acc, v, c)
           }, maxBins))
       def finish(s: Sketch): Sketch = s
-      def bufferEncoder: Encoder[Sketch] = Encoders.product[Sketch]
-      def outputEncoder: Encoder[Sketch] = Encoders.product[Sketch]
+      def bufferEncoder: Encoder[Sketch] = sketchEnc
+      def outputEncoder: Encoder[Sketch] = sketchEnc
     }
 
   /** SEQUENTIAL BHTT fold over an ORDERED value array — the

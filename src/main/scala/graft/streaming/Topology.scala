@@ -380,7 +380,7 @@ case class Topology(topics: Seq[TopicSpec], operators: Seq[OperatorSpec],
 
   private def batchSource(spark: SparkSession, t: TopicSpec): DataFrame =
     t.kind match {
-      case "parquet" => spark.read.parquet(t.path)
+      case "parquet" => graft.core.Tables.parquet(spark, t.path)
       case "json" => spark.read.schema(jsonSchema(t)).json(t.path)
       case "kafka" =>
         // bounded Kafka read — reference's data/pull.py batch consumer;

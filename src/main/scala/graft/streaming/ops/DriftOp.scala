@@ -69,11 +69,11 @@ object DriftOp extends OperatorFactory {
     * arithmetic is exactly [[Drift.driftFromCounts]]'s (DriftSpec parity
     * pin).
     *
-    * Relational on purpose (no per-window driver loop): the reference
-    * table is ≤ `buckets` rows, so the (window × ref-bucket) grid it
-    * broadcasts into is bounded at `buckets` rows per window, and one
-    * full-outer join + one window-keyed aggregate finish EVERY window
-    * in a single pass. */
+    * Relational on purpose (no per-window driver loop): one aggregate
+    * folds each window's cells into a histogram row (≤ `buckets` map
+    * entries), the reference folds into ONE such row that broadcasts,
+    * and [[Drift.histNum]] finishes every window in a single pass over
+    * the two maps — no join fans out over the cells. */
   def finish(cells: DataFrame, refCells: DataFrame): DataFrame =
     finishBy(cells, refCells, Seq("window_start"))
 
@@ -82,37 +82,26 @@ object DriftOp extends OperatorFactory {
     * Seq("window_start", "stratum") for the per-source form emitted
     * under `stratum_col`: one TVD row per key combination, each
     * bit-identical to [[graft.llm.Drift.driftFromCounts]] on that
-    * slice (DriftSpec pin). */
+    * slice (DriftSpec pin). A key combination holding a NULL is
+    * dropped, and an empty reference is refused. Both count tables must
+    * hold one row per (key, bucket); a repeated bucket is refused by
+    * the map build. */
   def finishBy(cells: DataFrame, refCells: DataFrame,
                keys: Seq[String]): DataFrame = {
     require(keys.nonEmpty, "finishBy: keys must be non-empty")
-    val dec = "decimal(18,0)"
     val kc = keys.map(col)
-    val wTot = cells.groupBy(kc: _*)
-      .agg(sum(col("cnt")).as("n_a"))
-    val refTot = refCells.agg(coalesce(sum(col("cnt")),
-      raise_error(lit("DriftOp.finish: empty reference"))).as("n_b"))
-    // every (finalized key, reference bucket) cell — buckets absent
-    // from the slice count 0 there but still contribute drift mass
-    val grid = wTot.select(kc: _*)
-      .crossJoin(broadcast(
-        refCells.select(col("bucket"), col("cnt").as("cnt_b"))))
-    cells.select(kc :+ col("bucket") :+ col("cnt").as("cnt_a"): _*)
-      .join(grid, keys :+ "bucket", "full_outer")
-      .na.fill(0L, Seq("cnt_a", "cnt_b"))
-      .join(broadcast(wTot), keys)
-      .crossJoin(broadcast(refTot))
-      .withColumn("__num", abs(
-        col("cnt_a").cast(dec) * col("n_b").cast(dec) -
-          col("cnt_b").cast(dec) * col("n_a").cast(dec))
-        .cast("decimal(38,0)"))
-      .groupBy(kc: _*)
-      .agg(first(col("n_a")).as("n_a"), first(col("n_b")).as("n_b"),
-        sum(col("__num")).as("__tvd_num"))
-      .select(kc ++ Seq(col("n_a"), col("n_b"),
+    val ref = Drift.histograms(refCells, Nil)
+      .select(col("__h").as("__hb"), col("__null").as("__null_b"),
+        coalesce(col("__n"),
+          raise_error(lit("DriftOp.finish: empty reference"))).as("n_b"))
+    Drift.histograms(cells.filter(kc.map(_.isNotNull).reduce(_ && _)), kc)
+      .crossJoin(broadcast(ref))
+      .withColumn("__tvd_num", Drift.histNum(col("__h"), col("__null"),
+        col("__n"), col("__hb"), col("__null_b"), col("n_b")))
+      .select(kc ++ Seq(col("__n").as("n_a"), col("n_b"),
         col("__tvd_num").cast("double").as("tvd_num"),
         (col("__tvd_num").cast("double") /
-          (lit(2.0) * col("n_a").cast("double") *
+          (lit(2.0) * col("__n").cast("double") *
             col("n_b").cast("double"))).as("tvd")): _*)
   }
 }

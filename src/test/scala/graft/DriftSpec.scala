@@ -160,6 +160,46 @@ class DriftSpec extends SparkSpec {
     assert(got == want)
   }
 
+  test("a NULL bucket matches nothing, as in driftFromCounts' join: " +
+    "adjacentDrift and finishBy equal it on every slice, and finishBy " +
+    "drops a NULL window_start group") {
+    val w1 = Timestamp.valueOf("2026-01-01 00:00:00")
+    val w2 = Timestamp.valueOf("2026-01-01 01:00:00")
+    val cells = Seq[(Timestamp, Option[Long], Long)](
+      (w1, Some(0L), 3L), (w1, None, 2L),
+      (w2, Some(0L), 1L), (w2, Some(1L), 4L), (w2, None, 1L),
+      (null, Some(0L), 7L)).toDF("window_start", "bucket", "cnt")
+    val ref = Seq[(Option[Long], Long)](
+      (Some(0L), 2L), (Some(2L), 1L), (None, 3L)).toDF("bucket", "cnt")
+    def slice(w: Timestamp) = cells
+      .filter(col("window_start") === w).select("bucket", "cnt")
+    def exact(a: org.apache.spark.sql.DataFrame,
+              b: org.apache.spark.sql.DataFrame) =
+      Drift.driftFromCounts(a, b, "bucket")
+        .select("n_a", "n_b", "tvd_num", "tvd")
+        .as[(Long, Long, Double, Double)].head()
+    val live = cells.filter(col("window_start").isNotNull)
+    val adj = Drift.adjacentDrift(live)
+      .select("window_start", "prev_start", "n_a", "n_b", "tvd_num",
+        "tvd")
+      .as[(Timestamp, Timestamp, Long, Long, Double, Double)]
+      .collect().toSeq
+    val e = exact(slice(w2), slice(w1))
+    assert(adj == Seq((w2, w1, e._1, e._2, e._3, e._4)))
+    val fin = DriftOp.finishBy(cells, ref, Seq("window_start"))
+      .orderBy("window_start")
+      .select("window_start", "n_a", "n_b", "tvd_num", "tvd")
+      .as[(Timestamp, Long, Long, Double, Double)].collect().toSeq
+    val want = Seq(w1, w2).map { w =>
+      val r = exact(slice(w), ref)
+      (w, r._1, r._2, r._3, r._4)
+    }
+    assert(fin == want)
+    // w1 vs ref: |3·6 − 2·5| + 2·6 (NULL, a side) + 1·5 (bucket 2) +
+    // 3·5 (NULL, ref side) = 8 + 12 + 5 + 15 = 40
+    assert(fin.head._4 == 40.0)
+  }
+
   test("DriftOp.finish equals Drift.driftFromCounts per window " +
     "(batch parity) across multiple windows") {
     val ts0 = Timestamp.valueOf("2026-01-01 00:10:00")

@@ -592,8 +592,8 @@ class PlanAuditSpec extends SparkSpec {
     // entry carrying the size argument that bounds the frame. A NEW
     // unpartitioned window anywhere else fails here, not on a cluster.
     val bounded: Map[String, String] = Map(
-      "q_adjacent_drift" -> ("lag series over the (hour x 8-bin) cell " +
-        "aggregate - cardinality = hours x bins, corpus-independent"),
+      "q_adjacent_drift" -> ("lag over one histogram row per hour " +
+        "(an 8-bin map each) - cardinality = hours, corpus-independent"),
       "q_lm_buckets" -> ("two-level global rank: the unpartitioned " +
         "cumsum runs over the k x bucket CELL table (Ops." +
         "globalRankBuckets), never the scored corpus"),

@@ -27,6 +27,13 @@ class TopKCollectSpec extends SparkSpec {
     assert(got("b") == Seq((9L, 0.2))) // fewer than k: all kept
   }
 
+  test("the aggregator's encoders are built once per JVM, not per call") {
+    val (a, b) = (new TopKCollect.TopKAgg(3), new TopKCollect.TopKAgg(5))
+    assert(a.bufferEncoder eq b.bufferEncoder)
+    assert(a.outputEncoder eq b.outputEncoder)
+    assert(a.outputEncoder eq a.outputEncoder)
+  }
+
   test("NaN scores rank greatest, deterministically, in any arrival " +
     "order (total order — insert and merge must agree)") {
     val rows = Seq(
