@@ -292,8 +292,10 @@ object Dev {
       df.repartition(16).write.mode("overwrite").parquet(s"$work/$name")
       spark.read.parquet(s"$work/$name").count()
     }
+    // through Tables.table: a raw sf dir stores `ts` as TIMESTAMP_NTZ,
+    // which a watermark refuses
     val evRows = fixture("events",
-      spark.read.parquet(s"$scaledDir/events.parquet")
+      core.Tables.table(spark, scaledDir, "events")
         .select("event_id", "ts", "user_id", "event_type", "value"))
     val docRows = fixture("docs", // event time for the stateful windows
       spark.read.parquet(s"$scaledDir/documents.parquet").select(

@@ -1,7 +1,7 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression, XXH64}
+import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.graftbridge.ColumnBridge
@@ -15,8 +15,9 @@ import org.apache.spark.sql.types.{ArrayType, DataType, LongType}
   * `transform(sequence(0, n-1), k -> array_min(transform(hs, h ->
   * xxhash64(k, h))))` dispatches numHashes × |hs| interpreted lambdas per
   * row — the dominant cost of MinHash at corpus scale. This compiles to a
-  * nested primitive loop (numHashes × |hs| static hash calls, no
-  * allocation beyond the output array).
+  * nested primitive loop over [[MinHashKernel]] (numHashes × |hs| hash
+  * finishes, no allocation beyond the output array and one long per
+  * shingle).
   *
   * Null elements are skipped; an all-null/empty input yields
   * Long.MaxValue sentinels (no shingles → no collisions, since bucket
@@ -39,54 +40,16 @@ case class MinHashSignature(child: Expression, numHashes: Int)
           s"minhash_signature needs array<bigint>, got ${other.catalogString}")
     }
 
-  override def nullSafeEval(input: Any): Any = {
-    val hs = input.asInstanceOf[ArrayData]
-    val n = hs.numElements()
-    val out = new Array[Long](numHashes)
-    var k = 0
-    while (k < numHashes) {
-      var min = Long.MaxValue
-      var i = 0
-      while (i < n) {
-        if (!hs.isNullAt(i)) {
-          val h = XXH64.hashLong(hs.getLong(i), k)
-          if (h < min) min = h
-        }
-        i += 1
-      }
-      out(k) = min
-      k += 1
-    }
-    new GenericArrayData(out)
-  }
+  override def nullSafeEval(input: Any): Any =
+    new GenericArrayData(
+      MinHashKernel.signature(input.asInstanceOf[ArrayData], numHashes))
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode)
       : ExprCode = {
-    val xxh = classOf[XXH64].getName
     val gad = classOf[GenericArrayData].getName
-    nullSafeCodeGen(ctx, ev, hs => {
-      val n = ctx.freshName("n")
-      val out = ctx.freshName("out")
-      val k = ctx.freshName("k")
-      val i = ctx.freshName("i")
-      val min = ctx.freshName("min")
-      val h = ctx.freshName("h")
-      s"""
-         |int $n = $hs.numElements();
-         |long[] $out = new long[$numHashes];
-         |for (int $k = 0; $k < $numHashes; $k++) {
-         |  long $min = Long.MAX_VALUE;
-         |  for (int $i = 0; $i < $n; $i++) {
-         |    if (!$hs.isNullAt($i)) {
-         |      long $h = $xxh.hashLong($hs.getLong($i), (long) $k);
-         |      if ($h < $min) $min = $h;
-         |    }
-         |  }
-         |  $out[$k] = $min;
-         |}
-         |${ev.value} = new $gad($out);
-       """.stripMargin
-    })
+    nullSafeCodeGen(ctx, ev, hs =>
+      s"${ev.value} = new $gad(" +
+        s"graft.functions.MinHashKernel.signature($hs, $numHashes));")
   }
 
   override protected def withNewChildInternal(newChild: Expression)
@@ -97,4 +60,54 @@ object MinHashSignature {
   def apply(hashes: Column, numHashes: Int): Column =
     ColumnBridge.column(
       MinHashSignature(ColumnBridge.expression(hashes), numHashes))
+}
+
+object MinHashKernel {
+  // XXH64's primes (org.apache.spark.sql.catalyst.expressions.XXH64)
+  private final val P1 = 0x9E3779B185EBCA87L
+  private final val P2 = 0xC2B2AE3D27D4EB4FL
+  private final val P3 = 0x165667B19E3779F9L
+  private final val P4 = 0x85EBCA77C2B2AE63L
+  private final val P5 = 0x27D4EB2F165667C5L
+
+  /** min over the non-null `hs` of `XXH64.hashLong(h, k)`, for each
+    * k < numHashes. `hashLong(h, k)` is
+    * `fmix(rotl((k + P5 + 8) ^ m, 27) * P1 + P4)` with
+    * `m = rotl(h * P2, 31) * P1` independent of the seed, so m is
+    * computed once per shingle and only the seed-dependent rest runs
+    * numHashes × |hs| times (bit-parity with the plain `hashLong` loop
+    * pinned in BandKeysSpec). */
+  def signature(hs: ArrayData, numHashes: Int): Array[Long] = {
+    val n = hs.numElements()
+    val m = new Array[Long](n)
+    var len = 0
+    var i = 0
+    while (i < n) {
+      if (!hs.isNullAt(i)) {
+        m(len) = java.lang.Long.rotateLeft(hs.getLong(i) * P2, 31) * P1
+        len += 1
+      }
+      i += 1
+    }
+    val out = new Array[Long](numHashes)
+    var k = 0
+    while (k < numHashes) {
+      val s = k + P5 + 8L
+      var min = Long.MaxValue
+      var j = 0
+      while (j < len) {
+        var h = java.lang.Long.rotateLeft(s ^ m(j), 27) * P1 + P4
+        h ^= h >>> 33
+        h *= P2
+        h ^= h >>> 29
+        h *= P3
+        h ^= h >>> 32
+        if (h < min) min = h
+        j += 1
+      }
+      out(k) = min
+      k += 1
+    }
+    out
+  }
 }

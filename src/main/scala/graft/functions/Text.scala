@@ -282,14 +282,24 @@ object Text {
 
   /** Content fingerprint of whitespace-normalized lowercase text: first 16
     * hex chars of md5 (engine-portable, oracle-checkable). Collision odds at
-    * 64 bits are fine for dedup bucketing; use full sha256 for addressing. */
-  def fingerprint(text: Column): Column =
-    // `trim(regexp_replace(lower(text), "\\s+", " "))` is byte-equal to
-    // `array_join(tokens(text), " ")` (whitespace runs → one space,
-    // ends stripped — after the replace, ends are 0x20 runs, exactly
-    // what trim removes) but runs as THREE native codegen string ops
-    // with no array materialization; equality pinned corpus-wide in
-    // TextKernelSpec
+    * 64 bits are fine for dedup bucketing; use full sha256 for addressing.
+    *
+    * Runs as the native [[Fingerprint]] kernel: one lowering, one byte
+    * walk over the tokens, the normalized bytes streamed straight into
+    * MD5 — no regex pass, no UTF-16 round trip, no normalized string,
+    * no per-row MessageDigest lookup. The regexp form cost about as
+    * much as the scan it sat on (docs/BENCH.md, "topo_batch per-document
+    * kernels"). [[fingerprintRegexp]] is the executable spec, bit-parity
+    * pinned in TextKernelSpec on both evaluation paths. */
+  def fingerprint(text: Column): Column = Fingerprint(text)
+
+  /** The declarative formulation [[fingerprint]] is bit-equivalent to —
+    * the shape the DuckDB oracles replay.
+    * `trim(regexp_replace(lower(text), "\\s+", " "))` is byte-equal to
+    * `array_join(tokens(text), " ")`: whitespace runs become one space
+    * and, after the replace, the ends are single 0x20s, exactly what
+    * trim removes. */
+  private[graft] def fingerprintRegexp(text: Column): Column =
     substring(md5(trim(regexp_replace(lower(text), "\\s+", " "))), 1, 16)
 
   /** Winnowing fingerprint selection (Schleimer, Wilkerson & Aiken,

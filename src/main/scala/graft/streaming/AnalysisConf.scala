@@ -16,6 +16,12 @@ import org.apache.spark.sql.SparkSession
   * runner restores the user's values right after its queries start.
   * Programmatic users who call a factory and `start()` themselves should
   * call [[restoreAll]] once their queries have started.
+  *
+  * A relaxed check still runs: `UnsupportedOperationChecker` then logs
+  * the AnalysisException it no longer throws, plan and stack trace
+  * included (about 140 lines), at WARN on every start(). The topology
+  * runner starts its queries inside [[whileStarting]], which logs one
+  * line naming the relaxed checks instead.
   */
 object AnalysisConf {
 
@@ -30,6 +36,59 @@ object AnalysisConf {
     if (!saved.contains((spark, key)))
       saved((spark, key)) = spark.conf.getOption(key)
     spark.conf.set(key, value)
+  }
+
+  private val checkerLogger =
+    "org.apache.spark.sql.catalyst.analysis.UnsupportedOperationChecker"
+  private var quieted = 0 // whileStarting calls in flight
+  private var added = false // the checker logger config is ours
+
+  /** Run `body` (the `start()` calls of queries analyzed under the
+    * overrides recorded on `spark`) with Spark's checker logger raised
+    * to ERROR, after one WARN line naming each relaxed check. With no
+    * override recorded, `body` runs as is. */
+  def whileStarting[T](spark: SparkSession)(body: => T): T = {
+    val relaxed = synchronized {
+      saved.keys.filter(_._1 eq spark).map(_._2).toSeq.sorted
+    }
+    if (relaxed.isEmpty) body
+    else {
+      org.slf4j.LoggerFactory.getLogger(getClass).warn(
+        "streaming queries start with relaxed analysis checks: " +
+          relaxed.map(k => s"$k=${spark.conf.get(k)}").mkString(", ") +
+          " (set by a topology operator; the checker's own warnings " +
+          "are suppressed)")
+      quiet(true)
+      try body finally quiet(false)
+    }
+  }
+
+  /** Give the checker logger a config of its own at ERROR on the first
+    * of nested calls and drop it on the last (left in place, it would
+    * pin the level past later root-level changes). A config the user
+    * set up for that logger is left alone, as is a logging backend
+    * other than log4j2. */
+  private def quiet(on: Boolean): Unit = synchronized {
+    import org.apache.logging.log4j.Level
+    import org.apache.logging.log4j.core.LoggerContext
+    import org.apache.logging.log4j.core.config.LoggerConfig
+    quieted += (if (on) 1 else -1)
+    org.apache.logging.log4j.LogManager.getContext(false) match {
+      case ctx: LoggerContext =>
+        val conf = ctx.getConfiguration
+        if (on && quieted == 1 &&
+            !conf.getLoggers.containsKey(checkerLogger)) {
+          conf.addLogger(checkerLogger,
+            new LoggerConfig(checkerLogger, Level.ERROR, true))
+          added = true
+          ctx.updateLoggers()
+        } else if (!on && quieted == 0 && added) {
+          conf.removeLogger(checkerLogger)
+          added = false
+          ctx.updateLoggers()
+        }
+      case _ =>
+    }
   }
 
   /** Restore every recorded override on `spark` to its prior value. Call

@@ -914,7 +914,9 @@ case class Topology(topics: Seq[TopicSpec], operators: Seq[OperatorSpec],
     // `inspect: true` on the topic opts an intermediate relay back in
     // for debugging.
     val consumedNames = operators.flatMap(_.sources).toSet
-    try {
+    // the checks a factory relaxed are named once here, not logged by
+    // Spark as a full AnalysisException on every start()
+    AnalysisConf.whileStarting(spark) { try {
     wired.foreach { case (sinkTopic, df) =>
       if (sinkTopic.kind == "memory" &&
           consumedNames.contains(sinkTopic.name) && !sinkTopic.inspect) {
@@ -979,7 +981,7 @@ case class Topology(topics: Seq[TopicSpec], operators: Seq[OperatorSpec],
       // half-running topology behind the thrown error
       started.foreach(q => try q.stop() catch { case _: Throwable => () })
       throw t
-    }
+    } }
   } finally {
     // factories may have relaxed analysis-time-only session confs for
     // their query's start(); restore the user's values before handing

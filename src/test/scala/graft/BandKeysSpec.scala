@@ -76,4 +76,35 @@ class BandKeysSpec extends SparkSpec {
         hof(col("sa"), col("sb")))).count()
     assert(badE == 0L)
   }
+
+  test("MinHashSignature (hoisted XXH64 loop) == min over a plain " +
+    "XXH64.hashLong(h, k) loop, codegen and interpreted: nulls, empty, " +
+    "one element, numHashes 1/32/128") {
+    import org.apache.spark.sql.catalyst.expressions.XXH64
+    import graft.functions.MinHashSignature
+    val rnd = new scala.util.Random(11)
+    val extremes = Seq(0L, -1L, Long.MinValue, Long.MaxValue)
+    val arrays: Seq[Option[Seq[Option[Long]]]] =
+      Seq(None, Some(Nil), Some(Seq(None)), Some(Seq(Some(42L))),
+        Some(extremes.map(Some(_))), Some(Seq(None, Some(7L), None))) ++
+        (1 to 60).map(_ => Some(Seq.fill(rnd.nextInt(300))(
+          if (rnd.nextInt(10) == 0) None else Some(rnd.nextLong()))))
+    def spec(hs: Seq[Option[Long]], n: Int): Seq[Long] =
+      (0 until n).map(k => hs.flatten.foldLeft(Long.MaxValue)((m, h) =>
+        math.min(m, XXH64.hashLong(h, k))))
+    // repartitioned so the optimizer cannot fold the projection over
+    // the local rows (that would run eval on both paths)
+    val df = arrays.zipWithIndex.map { case (a, i) => (i, a) }
+      .toDF("i", "hs").repartition(2)
+    for (n <- Seq(1, 32, 128)) {
+      val expect = arrays.map(_.map(spec(_, n)))
+      onBothPaths { path =>
+        val got = df.select(col("i"), MinHashSignature(col("hs"), n))
+          .as[(Int, Option[Seq[Long]])].collect().sortBy(_._1).map(_._2)
+        got.zip(expect).zipWithIndex.foreach { case ((g, e), i) =>
+          assert(g == e, s"$path n=$n array $i: ${arrays(i)}")
+        }
+      }
+    }
+  }
 }

@@ -19,6 +19,14 @@ class PlanAuditSpec extends SparkSpec {
 
   private def planStr(q: String): String = plan(q).toString
 
+  /** The optimized logical plan, also of a streaming Dataset (whose
+    * QueryExecution refuses to optimize outside `start()`). */
+  private def optimized(df: org.apache.spark.sql.Dataset[_])
+      : org.apache.spark.sql.catalyst.plans.logical.LogicalPlan =
+    if (df.isStreaming)
+      spark.sessionState.optimizer.execute(df.queryExecution.analyzed)
+    else df.queryExecution.optimizedPlan
+
   /** One battery query as built: its QueryExecution (or the failure to
     * build it), and whether building it left a Dataset cache in the
     * session. */
@@ -290,6 +298,62 @@ class PlanAuditSpec extends SparkSpec {
       assert(p.contains("BroadcastHashJoin"), s"$q:\n$p")
       assert(!p.contains("SortMergeJoin"), s"$q plans a SortMergeJoin")
     }
+  }
+
+  test("content dedup runs one fingerprint kernel per row and no " +
+    "regex: DedupOp (batch and streaming) and Dedup.exactByContent") {
+    import org.apache.spark.sql.catalyst.expressions.RegExpReplace
+    import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+    import graft.functions.Fingerprint
+    def audit(what: String, lp: LogicalPlan): Unit = {
+      val exprs = lp.collect { case n => n.expressions }.flatten
+      val regex = exprs.flatMap(_.collect { case r: RegExpReplace => r })
+      val fps = exprs.flatMap(_.collect { case f: Fingerprint => f })
+      assert(regex.isEmpty && fps.size == 1,
+        s"$what: ${fps.size} fingerprints, ${regex.size} regexp_replace" +
+          s"\n$lp")
+    }
+    val docs = graft.core.Tables.table(spark, sfDir, "documents")
+    audit("DedupOp batch", optimized(graft.streaming.ops.DedupOp(
+      Map.empty, Seq(docs)).head))
+    audit("exactByContent", optimized(graft.llm.Dedup.exactByContent(
+      docs, "doc_id", "text")))
+    val tmp = java.nio.file.Files.createTempDirectory("fp_plan").toString
+    val stream = spark.readStream
+      .schema("doc_id long, ts timestamp, text string").parquet(tmp)
+    audit("DedupOp streaming", optimized(graft.streaming.ops.DedupOp(
+      Map.empty, Seq(stream)).head))
+  }
+
+  test("NearDupOp groups band rows on the bkey column: no AppendColumns " +
+    "(a deserialization of every band row) in plain or verify mode, " +
+    "batch or streaming; the streaming state key stays `value: bigint`") {
+    import org.apache.spark.sql.catalyst.plans.logical.{AppendColumns, FlatMapGroupsWithState}
+    import org.apache.spark.sql.functions.{col, lit}
+    val docs = graft.core.Tables.table(spark, sfDir, "documents")
+      .select(col("doc_id"), col("text"),
+        lit(java.sql.Timestamp.valueOf("2024-01-01 00:00:00")).as("ts"))
+    val tmp = java.nio.file.Files.createTempDirectory("nd_plan").toString
+    val stream = spark.readStream
+      .schema("doc_id long, ts timestamp, text string").parquet(tmp)
+      .withWatermark("ts", "10 minutes")
+    try {
+      for ((mode, src) <- Seq("batch" -> docs, "streaming" -> stream);
+           verify <- Seq(false, true)) {
+        val lp = optimized(graft.streaming.ops.NearDupOp(
+          Map("verify" -> verify), Seq(src)).head)
+        val what = s"$mode verify=$verify"
+        assert(lp.collect { case a: AppendColumns => a }.isEmpty,
+          s"$what\n$lp")
+        // the key schema groupByKey(_.bkey) gave the state store, so
+        // checkpoints written before the column grouping restart
+        val keys = lp.collect { case f: FlatMapGroupsWithState =>
+          f.groupingAttributes.map(a => (a.name, a.dataType, a.nullable))
+        }
+        assert(keys == Seq(Seq(("value",
+          org.apache.spark.sql.types.LongType, false))), s"$what: $keys")
+      }
+    } finally graft.streaming.AnalysisConf.restoreAll(spark)
   }
 
   test("HLL distinct-count plans a partial max before the exchange — " +

@@ -50,4 +50,26 @@ abstract class SparkSpec extends AnyFunSuite {
     }
     n.get
   }
+
+  /** `body` with the session confs `kvs` set, the prior values restored
+    * afterwards. */
+  def withConf[T](kvs: (String, String)*)(body: => T): T = {
+    val prior = kvs.map { case (k, _) => k -> spark.conf.getOption(k) }
+    kvs.foreach { case (k, v) => spark.conf.set(k, v) }
+    try body
+    finally prior.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None)    => spark.conf.unset(k)
+    }
+  }
+
+  /** `body` on the codegen path, then on the interpreted one (no
+    * whole-stage codegen, `NO_CODEGEN` projection factories: each
+    * expression runs through `eval`). The argument names the path for
+    * assertion messages. */
+  def onBothPaths(body: String => Unit): Unit = {
+    body("codegen")
+    withConf("spark.sql.codegen.wholeStage" -> "false",
+      "spark.sql.codegen.factoryMode" -> "NO_CODEGEN")(body("interpreted"))
+  }
 }

@@ -2566,6 +2566,64 @@ class StreamingSpec extends SparkSpec {
       intercept[Exception](spark.table("relay_ro").collect())
     } finally queries.foreach(_.stop())
   }
+
+  test("topology start: a relaxed analysis check is named in ONE graft " +
+    "WARN line, and Spark's checker logs nothing while the query starts") {
+    import scala.jdk.CollectionConverters._
+    import org.apache.logging.log4j.core.{LogEvent, LoggerContext}
+    import org.apache.logging.log4j.core.appender.AbstractAppender
+    import org.apache.logging.log4j.core.config.Property
+    val checker =
+      "org.apache.spark.sql.catalyst.analysis.UnsupportedOperationChecker"
+    val events =
+      new java.util.concurrent.ConcurrentLinkedQueue[(String, String)]()
+    val capture = new AbstractAppender("relaxed-capture", null, null,
+        true, Property.EMPTY_ARRAY) {
+      override def append(e: LogEvent): Unit =
+        events.add((e.getLoggerName, e.getMessage.getFormattedMessage))
+    }
+    capture.start()
+    val ctx = org.apache.logging.log4j.LogManager.getContext(false)
+      .asInstanceOf[LoggerContext]
+    val root = ctx.getConfiguration.getRootLogger
+    val tmp = Files.createTempDirectory("topo_relaxed").toString
+    Seq((1L, java.sql.Timestamp.valueOf("2024-01-01 00:05:00"),
+      (1 to 40).map(i => s"w$i").mkString(" ")))
+      .toDF("doc_id", "ts", "text").write.parquet(s"$tmp/in")
+    val yaml =
+      s"""topics:
+         |  - name: docs
+         |    kind: parquet
+         |    path: $tmp/in
+         |    timestamp_col: ts
+         |    watermark: 10 minutes
+         |  - name: novel_relaxed
+         |    kind: memory
+         |operators:
+         |  neardup:
+         |    factory: graft.streaming.ops.NearDupOp
+         |    sources: [docs]
+         |    sinks: [novel_relaxed]
+         |""".stripMargin
+    root.addAppender(capture, null, null)
+    ctx.updateLoggers()
+    val queries =
+      try Topology.parse(yaml).runStream(spark, s"$tmp/ckpt")
+      finally {
+        root.removeAppender(capture.getName)
+        ctx.updateLoggers()
+      }
+    queries.foreach(_.stop())
+    val seen = events.asScala.toSeq
+    assert(!seen.exists(_._1 == checker), seen.map(_._1).distinct)
+    val named = seen.filter { case (logger, msg) =>
+      logger.startsWith("graft.streaming.AnalysisConf") && msg.contains(
+        "spark.sql.streaming.statefulOperator.checkCorrectness.enabled")
+    }
+    assert(named.size == 1, seen)
+    // the checker's logger keeps no config of its own afterwards
+    assert(!ctx.getConfiguration.getLoggers.containsKey(checker))
+  }
 }
 
 /** Reflection-resolvable pre-transform for the serve dict-event test —

@@ -78,21 +78,57 @@ class TextKernelSpec extends SparkSpec {
       s"only-hof=${(h -- k).take(3)} only-kernel=${(k -- h).take(3)}")
   }
 
+  /** Whitespace and case edges of the fingerprint's normalization: every
+    * `\s` byte in runs, CRLF runs, NBSP (not `\s`: stays inside its
+    * token), a codepoint that lowers to two (İ), final sigma, and inputs
+    * that normalize to the empty string. */
+  private val fpEdges: Seq[(Long, String)] = edges ++ Seq(
+    11L -> "tab\tsep\t\tdouble\t",
+    12L -> "vt\u000Bsep\u000B\u000B end",
+    13L -> "ff\u000Csep \u000C\u000C end",
+    14L -> "crlf\r\nline\r\n\r\nrun\r\n",
+    15L -> "nbsp\u00A0kept a\u00A0 b \u00A0",
+    16L -> "İstanbul İ İJK",
+    17L -> "ΣΑΣ σας ΣΑΣ.",
+    18L -> "\t\u000B\u000C\r\n ",
+    19L -> "one two  three four\tfive six",
+    20L -> " x")
+
   test("fingerprint (regexp form) == md5(array_join(tokens)) corpus-" +
     "wide and on edges") {
     def hofFp(c: org.apache.spark.sql.Column) =
       substring(md5(array_join(Text.tokensHof(c), " ")), 1, 16)
     val docs = graft.core.Tables.table(
       spark, "/root/testdata/sf0.001", "documents")
-    val bad = docs.select(Text.fingerprint(col("text")).as("f"),
-        hofFp(col("text")).as("g"))
-      .filter(not(col("f") <=> col("g"))).count()
-    assert(bad == 0L)
-    val badE = edges.toDF("id", "text")
-      .select(Text.fingerprint(col("text")).as("f"),
-        hofFp(col("text")).as("g"))
-      .filter(not(col("f") <=> col("g"))).count()
-    assert(badE == 0L)
+    // the native kernel (Text.fingerprint) must equal both declarative
+    // forms on the codegen and on the interpreted path; the edge rows
+    // are repartitioned so the optimizer cannot fold the projection
+    // over the local rows (that would run eval on both paths)
+    val frames = Seq("corpus" -> docs.select(col("doc_id").as("id"),
+      col("text")), "edges" -> fpEdges.toDF("id", "text").repartition(2))
+    onBothPaths { path =>
+      for ((name, frame) <- frames) {
+        val diff = frame.select(col("id"),
+            Text.fingerprint(col("text")).as("k"),
+            Text.fingerprintRegexp(col("text")).as("f"),
+            hofFp(col("text")).as("g"))
+          .filter(not(col("f") <=> col("g")) || not(col("k") <=> col("f")))
+          .as[(Long, Option[String], Option[String], Option[String])]
+          .collect()
+        assert(diff.isEmpty, s"$path $name: ${diff.take(3).mkString}")
+      }
+    }
+    // the edges really exercise the rule: NULL stays NULL, the
+    // whitespace-only inputs hash the empty string, NBSP is content
+    val fp = frames(1)._2.select(col("id"), Text.fingerprint(col("text")))
+      .as[(Long, Option[String])].collect().toMap
+    val empty = Some("d41d8cd98f00b204")
+    assert(fp(10L).isEmpty && fp(6L) == empty && fp(7L) == empty &&
+      fp(18L) == empty, fp)
+    val nbsp = java.security.MessageDigest.getInstance("MD5")
+      .digest("nbsp\u00A0kept a\u00A0 b \u00A0".getBytes("UTF-8"))
+      .take(8).map(b => f"$b%02x").mkString
+    assert(fp(15L) == Some(nbsp), fp(15L))
   }
 
   test("TokenCount kernel == size(tokens(text)) corpus-wide and on " +

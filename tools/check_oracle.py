@@ -7,7 +7,9 @@ Usage: python3 tools/check_oracle.py <sfDir> <verifyOutDir> \
 
 Reads each <name>/ parquet written by graft.Verify, runs the matching
 oracle_sql.json query in DuckDB over the same parquet tables, sorts columns
-by name and rows by value, and compares exactly.
+by name and rows by value, and compares exactly. Each report entry carries
+`seconds`, the DuckDB execute + fetch time of that oracle; the run ends by
+printing the 10 slowest.
 
 Parallel by default (r15): the per-query cost is dominated by DuckDB
 planning/executing the macro-expanded oracle SQL (~4s fixed each at any
@@ -20,6 +22,7 @@ import json
 import multiprocessing as mp
 import os
 import sys
+import time
 
 import duckdb
 import pyarrow.dataset as pds
@@ -89,17 +92,22 @@ def _check_one(item):
         _N_SINCE = 0
     _N_SINCE += 1
     lines = []
+    t0 = None
     try:
         got_tbl = pds.dataset(f"{_OUT}/{name}").to_table()
         got_cols = got_tbl.column_names
         got_rows = [tuple(r.values()) for r in got_tbl.to_pylist()]
+        t0 = time.perf_counter()
         exp = _CON.execute(sql)
         exp_cols = [d[0] for d in exp.description]
         exp_rows = exp.fetchall()
+        secs = round(time.perf_counter() - t0, 3)
     except Exception as e:
+        secs = None if t0 is None else round(time.perf_counter() - t0, 3)
         return (name,
                 {"rows_match": None, "schema_match": None,
-                 "values_match": None, "err": str(e)[:300]},
+                 "values_match": None, "err": str(e)[:300],
+                 "seconds": secs},
                 [f"FAIL {name}: exception {e}"], False)
     gc, gr = canon(got_rows, got_cols)
     ec, er = canon(exp_rows, exp_cols)
@@ -107,7 +115,7 @@ def _check_one(item):
              "schema_match": gc == ec,
              "values_match": gr == er,
              "spark_rows": len(gr), "oracle_rows": len(er),
-             "err": None}
+             "err": None, "seconds": secs}
     if gc != ec:
         lines.append(f"FAIL {name}: schema {gc} != {ec}")
         return name, entry, lines, False
@@ -175,6 +183,10 @@ def main(sf_dir, out_dir, json_out=None, workers=None):
                 initargs=(sf_dir, out_dir, mem)) as pool:
             for result in pool.imap(_check_one, items):
                 consume(result)
+    timed = sorted(((e["seconds"], n) for n, e in report.items()
+                    if e["seconds"] is not None), reverse=True)
+    print("slowest oracles (DuckDB s): " +
+          ", ".join(f"{n} {s:.2f}" for s, n in timed[:10]))
     print(f"== {n_pass} pass / {n_fail} fail ==")
     if json_out:
         with open(json_out, "w") as f:
