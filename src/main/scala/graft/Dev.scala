@@ -283,7 +283,6 @@ object Dev {
                new core.Measure.WaitBudget(300000L)): Unit = {
     require(new java.io.File(s"$scaledDir/events.parquet").exists,
       s"no scaled corpus at $scaledDir — run graft.Dev scale first")
-    val partitions = spark.conf.get("spark.sql.shuffle.partitions")
     val work = java.nio.file.Files
       .createTempDirectory("graft_stream_sweep").toString
     // re-sprayed into 16 files so max_per_trigger sets the micro-batch
@@ -335,11 +334,8 @@ object Dev {
       ("stateful_neardup_conservative", docRows, yaml("docs", 2,
         windowed = true, "NearDupOp", "{verify: true}")))
     // Sink and checkpoint paths carry a per-run suffix: a streaming query
-    // must never resume another run's checkpoint. The topology-level
-    // shuffle_partitions is session-scoped, so it is reset before every
-    // run lest a tuned row leak its partitioning into the next.
-    def timed(name: String, yamlFor: String => String, sfx: String) = {
-      spark.conf.set("spark.sql.shuffle.partitions", partitions)
+    // must never resume another run's checkpoint.
+    def timed(name: String, yamlFor: String => String, sfx: String) =
       seconds {
         val started = graft.streaming.Topology
           .parse(yamlFor(s"out_$name$sfx"))
@@ -347,7 +343,6 @@ object Dev {
         try started.foreach(_.processAllAvailable())
         finally started.foreach(_.stop())
       }
-    }
     // untimed warmup: first-touch JIT/codegen of the micro-batch machinery
     // (source listing, commit log, parquet sink) would otherwise land on
     // the first timed row; each op's own codegen stays inside its row
@@ -358,7 +353,6 @@ object Dev {
         core.Measure.awaitQuietBox(budget)
         name -> timed(name, yamlFor, sfx)
     }.toMap)
-    spark.conf.set("spark.sql.shuffle.partitions", partitions)
     val loadAfter = core.Measure.loadAvg
     val cells = topologies.map { case (name, rows, _) =>
       val samples = sweeps.map(_(name))

@@ -15,23 +15,19 @@ object Measure {
     * oversubscribes a small box). */
   def cpus: String = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
 
-  /** The measurement session's builder: local[cpus], cpus shuffle
-    * partitions, 8 MB splits (single-file test tables stay parallel),
-    * UTC, graft extensions, no UI, and the engine's generated-class
-    * cache settings (`GraftSession`). Callers that add confs
-    * (`graft.Dev`) add them to this builder, before the session exists,
-    * so static confs apply too. */
+  /** What the measurement session adds to `GraftSession`'s posture:
+    * 8 MB splits, so the single-file test tables stay parallel, and no
+    * UI. */
+  val Confs: Map[String, String] = Map(
+    "spark.sql.files.maxPartitionBytes" -> "8m",
+    "spark.ui.enabled" -> "false")
+
+  /** The measurement session's builder: `GraftSession.builder` on
+    * local[cpus] (so cpus shuffle partitions) plus [[Confs]]. Callers
+    * that add confs (`graft.Dev`) add them to this builder, before the
+    * session exists, so static confs apply too. */
   def builder(cpus: String): SparkSession.Builder =
-    SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.files.maxPartitionBytes", "8m")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.codegen.cache.maxEntries",
-        GraftSession.CodegenCacheEntries)
-      .config("spark.sql.codegen.useIdInClassName", "false")
+    GraftSession.builder(s"local[$cpus]").config(Confs)
 
   /** The measurement SparkSession every timed main uses ([[builder]]). */
   def session(cpus: String): SparkSession = {

@@ -101,10 +101,6 @@ object Text {
   def shingles(text: Column, n: Int): Column =
     shinglesFromTokens(tokens(text), n)
 
-  /** Distinct shingle set (for Jaccard/MinHash). */
-  def shingleSet(text: Column, n: Int): Column =
-    array_distinct(shingles(text, n))
-
   // --- language ID (n-gram/stopword heuristic) -----------------------------
 
   /** Tiny per-language stopword inventories. A real system would ship
@@ -167,8 +163,6 @@ object Text {
   def nTokens(text: Column): Column = TokenCount(text)
 
   def nTokensOf(ts: Column): Column = size(ts)
-
-  def meanTokenLen(text: Column): Column = meanTokenLenOf(tokens(text))
 
   def meanTokenLenOf(ts: Column): Column = {
     val totalChars = aggregate(ts, lit(0L), (acc, t) => acc + length(t))

@@ -205,12 +205,6 @@ object Dedup {
       .otherwise(array().cast("array<bigint>"))
   }
 
-  /** Convenience single-expression signature (tests, ad-hoc use). */
-  def minhashSignature(textCol: Column, shingleSize: Int, numHashes: Int)
-      : Column =
-    minhashSigFromHashes(
-      textShingleHashes(textCol, shingleSize), numHashes)
-
   /** MinHash + LSH banded near-dup candidate pairs.
     *
     * shingle → `numHashes`-long signature → split into `bands` bands of

@@ -22,10 +22,6 @@ object Ops {
   def map(cols: (String, Column)*): Op =
     df => df.select(cols.map { case (n, c) => c.as(n) }: _*)
 
-  /** `ops.map` keeping existing columns (withColumn flavor). */
-  def mapWith(cols: (String, Column)*): Op =
-    df => cols.foldLeft(df) { case (d, (n, c)) => d.withColumn(n, c) }
-
   /** `ops.filter` (makinage/serve/serve.py:145): predicate keep. Catalyst
     * pushes this to the parquet scan when possible. */
   def filter(pred: Column): Op = _.filter(pred)
@@ -143,13 +139,6 @@ object Ops {
   def withLatestFrom(side: DataFrame, latestBy: Column): Op = { df =>
     val latest = side.orderBy(latestBy.desc).limit(1)
     df.crossJoin(broadcast(latest))
-  }
-
-  /** `ops.combine_latest` config-join variant: attach a static config
-    * snapshot as literal columns (the per-micro-batch "latest config wins"
-    * contract, SURVEY.md §2.5 Dynamic reconfig). */
-  def withConfig(config: Map[String, Any]): Op = { df =>
-    config.foldLeft(df) { case (d, (k, v)) => d.withColumn(k, lit(v)) }
   }
 
   /** rxsci `sample`: deterministic decimation — keep every nth event per
@@ -454,13 +443,6 @@ object Ops {
         "filtered to empty?)")
     df => branches.map(_(df)).reduce(_.unionByName(_))
   }
-
-  /** rxsci `group_by`: run a sub-pipeline per key group. In Spark the
-    * keyed sub-pipeline IS the keyed operator family (scan/roll/agg take
-    * `partition` columns), so this helper just pins the idiom: partition
-    * the stream by key, apply `pipeline` built against those keys. */
-  def groupByPipe(keys: Seq[Column])(pipeline: Seq[Column] => Op): Op =
-    df => pipeline(keys)(df)
 
   /** rxsci `last`: final value per key under an explicit order (argmax
     * pattern: one shuffle, no join). */

@@ -4,8 +4,9 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.types.StructType
 
 /** Container loaders (rxsci `rs.container.*`, SURVEY.md §2.4: typed
-  * CSV/JSON parsing) and the bounded/unbounded source pairs that back the
-  * unified batch/stream promise (reference README.rst:38).
+  * CSV/JSON parsing), the bounded side of the unified batch/stream
+  * promise (reference README.rst:38); a topology reads the same topics
+  * unbounded (`streaming.Topology`).
   *
   * Schemas are explicit (SURVEY.md §1.2 policy: inference allowed in dev,
   * pinned in prod) — an inferred schema on a 100 TB dataset is both a
@@ -90,24 +91,4 @@ object Sources {
       .option("ignoreLeadingWhiteSpace", "false")
       .option("ignoreTrailingWhiteSpace", "false")
       .csv(path)
-
-  /** Streaming counterparts — same schema contract, unbounded. */
-  def csvStream(spark: SparkSession, path: String, schema: StructType,
-                header: Boolean = true, delimiter: String = ","): DataFrame =
-    spark.readStream.option("header", header.toString)
-      // same whitespace AND delimiter pins as the batch [[csv]] reader
-      // — the batch/stream pair must not drift (a tab-delimited corpus
-      // readable in batch must stream identically)
-      .option("delimiter", delimiter)
-      .option("ignoreLeadingWhiteSpace", "false")
-      .option("ignoreTrailingWhiteSpace", "false")
-      .schema(schema).csv(path)
-
-  def jsonStream(spark: SparkSession, path: String, schema: StructType)
-      : DataFrame =
-    spark.readStream.schema(schema).json(path)
-
-  def parquetStream(spark: SparkSession, path: String, schema: StructType)
-      : DataFrame =
-    spark.readStream.schema(schema).parquet(path)
 }

@@ -11,12 +11,9 @@ import org.apache.spark.sql.functions._
   * running serve operators hot-swap (`start_from: last` semantics).
   *
   * Spark form: file bytes → single-row DataFrame (name, version, content)
-  * → sink. Kafka sinks need `kafka.max.request.size` raised for large
-  * models (the reference hardcodes 32 MiB, model_publisher.py:66).
+  * → a file-backed model topic.
   */
 object ModelPublisher {
-
-  val MaxRequestSize: Long = 32L * 1024 * 1024 // reference's 32 MiB
 
   /** Read one model artifact into a publishable single-row DataFrame. */
   def modelRow(spark: SparkSession, name: String, version: Long,
@@ -31,17 +28,6 @@ object ModelPublisher {
     * take max(version), i.e. `start_from: last`). */
   def publishToPath(df: DataFrame, topicPath: String): Unit =
     df.write.mode("append").parquet(topicPath)
-
-  /** Publish to a Kafka model topic with the raw (`none`) codec —
-    * content as the record value (reference config.sample.serve.yml:10-12). */
-  def publishToKafka(df: DataFrame, endpoint: String, topic: String): Unit =
-    df.select(col("name").cast("binary").as("key"),
-        col("content").as("value"))
-      .write.format("kafka")
-      .option("kafka.bootstrap.servers", endpoint)
-      .option("kafka.max.request.size", MaxRequestSize.toString)
-      .option("topic", topic)
-      .save()
 
   /** Resolve the latest model from a file-backed topic (start_from: last). */
   def latestFromPath(spark: SparkSession, topicPath: String): DataFrame = {

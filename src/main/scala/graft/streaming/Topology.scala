@@ -342,21 +342,25 @@ case class Topology(topics: Seq[TopicSpec], operators: Seq[OperatorSpec],
                     config: Map[String, Any],
                     shufflePartitions: Option[Int] = None) {
 
-  /** Apply the topology-level `shuffle_partitions:` knob (measured
-    * r14, history/neardup_profile.json: a low-rate stateful stream
-    * pays (partitions x state-store commit) PER MICRO-BATCH — 8 instead of
+  /** `run` with the topology-level `shuffle_partitions:` knob set,
+    * then the session's prior value back (measured r14,
+    * history/neardup_profile.json: a low-rate stateful stream pays
+    * (partitions x state-store commit) PER MICRO-BATCH — 8 instead of
     * 32 partitions ran the near-dup topology 1.6x faster, and 2.9x
-    * combined with a larger max_per_trigger). Session-scoped by
-    * design and NOT restored: a stateful query pins its state
-    * partition count at the first micro-batch, but stateless
-    * exchanges re-read the conf every batch, so restoring after
-    * start() would flip them mid-stream. The CLI process model (one
-    * topology per process, reference makinage.main) owns its session;
-    * programmatic callers embedding a topology in a shared session
-    * should set/restore the conf themselves and omit the knob. */
-  private def applyShufflePartitions(spark: SparkSession): Unit =
-    shufflePartitions.foreach(n =>
-      spark.conf.set("spark.sql.shuffle.partitions", n.toString))
+    * combined with a larger max_per_trigger). A started streaming query
+    * keeps the knob after the restore: it runs on a session clone taken
+    * at `start()`, and its checkpoint's offset log records the value
+    * for restarts (TopologySpec pins both). */
+  private def withShufflePartitions[T](spark: SparkSession)(run: => T): T =
+    shufflePartitions match {
+      case None => run
+      case Some(n) =>
+        val key = "spark.sql.shuffle.partitions"
+        val prior = spark.conf.getOption(key)
+        spark.conf.set(key, n.toString)
+        try run
+        finally prior.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+    }
 
   private def topic(name: String): TopicSpec =
     topics.find(_.name == name).getOrElse(
@@ -726,9 +730,13 @@ case class Topology(topics: Seq[TopicSpec], operators: Seq[OperatorSpec],
     * upstream (unseeded sample, unordered tie-break) could hand each
     * consumer a different row set, which the write-through relay could
     * never do. Residual caveat, same as any Spark persist: lost
-    * partitions recompute on executor failure. */
-  def runBatch(spark: SparkSession, outDir: String): Seq[String] = {
-    applyShufflePartitions(spark)
+    * partitions recompute on executor failure.
+    *
+    * `shuffle_partitions:` holds for the run only. Every file sink is
+    * written before it returns; a terminal memory sink stays a lazy
+    * view, so it computes later, at the session's own partitions. */
+  def runBatch(spark: SparkSession, outDir: String)
+      : Seq[String] = withShufflePartitions(spark) {
     // each file sink is written AT WIRING TIME (topological order) and
     // the read-back relays to downstream operators — every DAG stage is
     // computed exactly once, whatever the chain depth
@@ -843,10 +851,10 @@ case class Topology(topics: Seq[TopicSpec], operators: Seq[OperatorSpec],
     * per-batch re-wire hands the factory a bounded batch frame, so a
     * stateful streaming op (flatMapGroupsWithState, e.g. [[ops.Roll]])
     * would restart its state every micro-batch; keep stateful operators
-    * on the static path. */
+    * on the static path. `shuffle_partitions:` is restored once the
+    * queries have started; they keep it ([[withShufflePartitions]]). */
   def runStream(spark: SparkSession, checkpointRoot: String)
-      : Seq[StreamingQuery] = try {
-    applyShufflePartitions(spark)
+      : Seq[StreamingQuery] = withShufflePartitions(spark) { try {
     val (dynamic, static) = operators.partition(_.configTopic.nonEmpty)
     // over ALL operators: the wire() call below only sees the static
     // subset, which would let two dynamic operators (or a static plus
@@ -988,5 +996,5 @@ case class Topology(topics: Seq[TopicSpec], operators: Seq[OperatorSpec],
     // the session back — ALSO when a start() throws mid-way, or the
     // relaxation would leak for the rest of the session
     AnalysisConf.restoreAll(spark)
-  }
+  } }
 }

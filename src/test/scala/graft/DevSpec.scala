@@ -7,9 +7,9 @@ import scala.jdk.CollectionConverters._
 /** The dev CLI (`graft.Dev`) and the measurement surface it stands on:
   * every query subcommand runs on one sf0.001 query against the test
   * session, the scale sweep writes the artifact ScaleOutSpec reads, the
-  * artifact escaper round-trips, no main outside `graft/core/`
-  * builds its own SparkSession, and no library code persists outside
-  * `Ops.withPersisted`. */
+  * artifact escaper round-trips, every session is built on
+  * `core.GraftSession.builder` and adds only its named confs to its
+  * posture, and no library code persists outside `Ops.withPersisted`. */
 class DevSpec extends SparkSpec {
 
   private val sfDir = "/root/testdata/sf0.001"
@@ -21,10 +21,10 @@ class DevSpec extends SparkSpec {
     buf.toString("UTF-8").linesIterator.toSeq
   }
 
-  /** Every non-comment line of `src/main/scala`, as (path relative to
-    * it, 1-based line number, trimmed text). */
-  private lazy val mainCode: Seq[(String, Int, String)] = {
-    val root = Paths.get("src/main/scala")
+  /** Every non-comment line of the Scala sources under `dir`, as (path
+    * relative to it, 1-based line number, trimmed text). */
+  private def code(dir: String): Seq[(String, Int, String)] = {
+    val root = Paths.get(dir)
     assert(Files.isDirectory(root), root.toAbsolutePath)
     val walk = Files.walk(root)
     try walk.iterator.asScala
@@ -40,14 +40,50 @@ class DevSpec extends SparkSpec {
     finally walk.close()
   }
 
-  test("no SparkSession.builder() call in src/main/scala outside " +
-    "graft/core/ (comment lines excluded)") {
-    val offenders = mainCode.collect {
-      case (f, _, l) if !f.startsWith("graft/core/") &&
-        l.contains("SparkSession.builder()") => f
-    }.distinct.sorted
+  /** The confs a builder holds before it builds a session (Spark keeps
+    * the map package-private, hence the reflection). */
+  private def options(b: org.apache.spark.sql.SparkSession.Builder)
+      : Map[String, String] =
+    b.getClass.getMethod("options").invoke(b)
+      .asInstanceOf[scala.collection.mutable.Map[String, String]].toMap
+
+  test("only core/GraftSession.scala calls SparkSession's builder " +
+    "(src/main/scala and src/test/scala, comment lines excluded)") {
+    val call = "SparkSession" + ".builder()"
+    val offenders = Seq("src/main/scala", "src/test/scala").flatMap { d =>
+      code(d).collect { case (f, _, l) if l.contains(call) => s"$d/$f" }
+    }.distinct.filterNot(_ == "src/main/scala/graft/core/GraftSession.scala")
     assert(offenders.isEmpty,
-      s"build sessions through core.Measure or core.GraftSession: $offenders")
+      s"build sessions on core.GraftSession.builder: $offenders")
+  }
+
+  test("the test session runs every conf of GraftSession's posture") {
+    val differ = core.GraftSession.Posture.collect {
+      case (k, v) if !spark.conf.getOption(k).contains(v) =>
+        s"$k=${spark.conf.getOption(k)}, posture $v"
+    }
+    assert(differ.isEmpty, differ.mkString("; "))
+  }
+
+  test("Measure.builder and the test session add only their named confs " +
+    "to GraftSession.builder's") {
+    val base = options(core.GraftSession.builder("local[4]"))
+    assert(base == core.GraftSession.Posture ++ Map(
+      "spark.master" -> "local[4]", "spark.sql.shuffle.partitions" -> "4"))
+    Seq("Measure" -> (core.Measure.builder("4"), core.Measure.Confs),
+      "TestSpark" -> (TestSpark.builder, TestSpark.Confs)).foreach {
+      case (seam, (b, confs)) =>
+        assert(confs.keySet.intersect(base.keySet).isEmpty, seam)
+        assert(options(b) == base ++ confs, seam)
+    }
+    // a posture conf re-stated with its own value leaves the maps equal,
+    // so the seams' sources set confs through their list only
+    val restated = Seq("src/main/scala" -> "graft/core/Measure.scala",
+      "src/test/scala" -> "graft/SparkSpec.scala").flatMap { case (d, f) =>
+      code(d).collect { case (`f`, n, l) if l.contains(".config(") &&
+          !l.contains(".config(Confs)") => s"$f:$n: $l" }
+    }
+    assert(restated.isEmpty, restated.mkString("\n"))
   }
 
   test("src/main/scala persists only in Ops.withPersisted and the " +
@@ -59,7 +95,7 @@ class DevSpec extends SparkSpec {
       "graft/streaming/Topology.scala" -> (1, "runBatch memory relay: " +
         "a view with two or more consumers is cached so they read one " +
         "materialization; the view is the run's output by design"))
-    val hits = mainCode.filter { case (_, _, l) =>
+    val hits = code("src/main/scala").filter { case (_, _, l) =>
       l.contains(".persist(") || l.contains(".cache()")
     }
     val offenders = hits.groupBy(_._1).toSeq.sortBy(_._1).collect {

@@ -3,22 +3,24 @@ package graft
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Shared local session for all suites (one per JVM — Test/fork := true). */
+/** Shared local session for all suites (one per JVM — Test/fork := true):
+  * `GraftSession.builder` on local[4] plus [[Confs]]. */
 object TestSpark {
+
+  /** What the test session adds to `GraftSession`'s posture: its name,
+    * a throwaway warehouse dir (a static conf, so set before create) and
+    * no UI. */
+  val Confs: Map[String, String] = Map(
+    "spark.app.name" -> "graft-test",
+    "spark.sql.warehouse.dir" ->
+      java.nio.file.Files.createTempDirectory("graft-wh").toString,
+    "spark.ui.enabled" -> "false")
+
+  def builder: SparkSession.Builder =
+    graft.core.GraftSession.builder("local[4]").config(Confs)
+
   lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.warehouse.dir", // static conf — set before create
-        java.nio.file.Files.createTempDirectory("graft-wh").toString)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.codegen.cache.maxEntries", // static, as above
-        graft.core.GraftSession.CodegenCacheEntries)
-      .config("spark.sql.codegen.useIdInClassName", "false")
-      .getOrCreate()
+    val s = builder.getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     s
   }

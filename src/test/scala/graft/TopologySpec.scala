@@ -1123,12 +1123,11 @@ class TopologySpec extends SparkSpec {
   test("GraftSession derives shuffle partitions from a local master " +
     "and leaves cluster masters for the deployment to set") {
     import graft.core.GraftSession.derivePartitions
-    assert(derivePartitions("local[7]", 0) == 7)
-    assert(derivePartitions("local[*]", 0) ==
+    assert(derivePartitions("local[7]") == 7)
+    assert(derivePartitions("local[*]") ==
       Runtime.getRuntime.availableProcessors())
-    assert(derivePartitions("spark://host:7077", 0) == 0)
-    assert(derivePartitions("", 0) == 0)
-    assert(derivePartitions("local[7]", 48) == 48) // explicit wins
+    assert(derivePartitions("spark://host:7077") == 0)
+    assert(derivePartitions("") == 0)
   }
 
   test("operator config precedence: op-local config overrides the " +
@@ -1651,8 +1650,8 @@ class TopologySpec extends SparkSpec {
         "source failed to resolve")
   }
 
-  test("shuffle_partitions topology knob: parsed, applied at run " +
-    "(session-scoped by documented design), refused when non-positive") {
+  test("shuffle_partitions topology knob: parsed, holds for runBatch " +
+    "only, refused when non-positive") {
     val tmp = Files.createTempDirectory("topo_sp").toString
     Seq("1", "2", "3").toDF("value")
       .write.mode("overwrite").parquet(s"$tmp/in")
@@ -1666,7 +1665,7 @@ class TopologySpec extends SparkSpec {
          |    path: $tmp/out
          |operators:
          |  multiply:
-         |    factory: graft.streaming.ops.Multiply
+         |    factory: graft.PartitionsProbe
          |    sources: [values]
          |    sinks: [out]
          |config:
@@ -1678,19 +1677,64 @@ class TopologySpec extends SparkSpec {
     intercept[IllegalArgumentException] {
       Topology.parse(yaml("shuffle_partitions: 0\n"))
     }
-    // the knob is session-scoped for the topology's lifetime (see the
-    // applyShufflePartitions scaladoc) — save/restore around the run
-    // because the suite shares its session
     val key = "spark.sql.shuffle.partitions"
     val prior = spark.conf.get(key)
+    assert(prior != "8")
+    topo.runBatch(spark, s"$tmp/sinks")
+    assert(PartitionsProbe.seen.contains("8"),
+      "runBatch must wire the topology at its shuffle_partitions")
+    assert(spark.conf.get(key) == prior,
+      "runBatch must hand the session back at its own partitions")
+    val got = spark.read.parquet(s"$tmp/sinks/out")
+      .select("value").as[String].collect().map(_.toLong).sorted.toSeq
+    assert(got == Seq(2L, 4L, 6L))
+  }
+
+  test("shuffle_partitions in runStream: restored once the queries have " +
+    "started, while the started stateful query keeps the knob") {
+    val tmp = Files.createTempDirectory("topo_sp_stream").toString
+    Seq((1L, "a b", "2024-01-01 00:00:00"),
+      (2L, "A  b", "2024-01-01 00:01:00"), (3L, "c", "2024-01-01 00:02:00"))
+      .toDF("doc_id", "text", "ts")
+      .withColumn("ts", col("ts").cast("timestamp"))
+      .write.mode("overwrite").parquet(s"$tmp/in")
+    val yaml =
+      s"""shuffle_partitions: 8
+         |topics:
+         |  - name: docs
+         |    kind: parquet
+         |    path: $tmp/in
+         |  - name: kept
+         |    kind: parquet
+         |    path: $tmp/out
+         |operators:
+         |  dedup:
+         |    factory: graft.streaming.ops.DedupOp
+         |    sources: [docs]
+         |    sinks: [kept]
+         |""".stripMargin
+    val key = "spark.sql.shuffle.partitions"
+    val prior = spark.conf.get(key)
+    assert(prior != "8")
+    val qs = Topology.parse(yaml).runStream(spark, s"$tmp/ckpt")
     try {
-      topo.runBatch(spark, s"$tmp/sinks")
-      assert(spark.conf.get(key) == "8",
-        "runBatch must apply the topology's shuffle_partitions")
-      val got = spark.read.parquet(s"$tmp/sinks/out")
-        .select("value").as[String].collect().map(_.toLong).sorted.toSeq
-      assert(got == Seq(2L, 4L, 6L))
-    } finally spark.conf.set(key, prior)
+      assert(spark.conf.get(key) == prior)
+      qs.foreach(_.processAllAvailable())
+      assert(spark.conf.get(key) == prior)
+      // the first batch's offset log records the query's partitions,
+      // and the dedup state store has one directory per partition
+      val meta = Files.readAllLines(
+        java.nio.file.Paths.get(s"$tmp/ckpt/kept/offsets/0")).get(1)
+      assert(new com.fasterxml.jackson.databind.ObjectMapper().readTree(meta)
+        .get("conf").get(key).asText == "8", meta)
+      val state = new java.io.File(s"$tmp/ckpt/kept/state/0")
+      assert(state.list().count(_.forall(_.isDigit)) == 8,
+        state.list().mkString(","))
+      // docs 1 and 2 share a fingerprint: one of them is kept
+      val kept = spark.read.parquet(s"$tmp/out").select("doc_id").as[Long]
+        .collect().toSeq
+      assert(kept.size == 2 && kept.contains(3L), kept)
+    } finally qs.foreach(_.stop())
   }
 
   test("parse refuses duplicate topic declarations — topic() resolves " +
@@ -1780,5 +1824,19 @@ class TopologySpec extends SparkSpec {
     assert(ex.getMessage.contains("config_topic"), ex.getMessage)
     assert(spark.streams.active.length == activeBefore,
       "static queries started before the config-topic validation fired")
+  }
+}
+
+/** `Multiply` that records the session's shuffle partitions when the
+  * topology wires it. */
+object PartitionsProbe extends graft.streaming.OperatorFactory {
+  @volatile var seen: Option[String] = None
+
+  def apply(config: Map[String, Any],
+            sources: Seq[org.apache.spark.sql.DataFrame])
+      : Seq[org.apache.spark.sql.DataFrame] = {
+    seen = sources.head.sparkSession.conf
+      .getOption("spark.sql.shuffle.partitions")
+    graft.streaming.ops.Multiply(config, sources)
   }
 }
